@@ -243,25 +243,6 @@ object StreamingDedup {
         })
   }
 
-  /** Streaming SEMANTIC dedup (`foreachBatch`) against an accumulating
-    * kept-corpus parquet store — the streaming face of
-    * [[graft.operators.KMeansOps.incrementalSemDedup]], closing the
-    * streaming loop on the semantic family the way bloom dedup closes it
-    * for exact content.
-    *
-    * Per micro-batch: read the store snapshot (kept vectors only), run
-    * the incremental keep rule (dropped by any same-cluster STORE row or
-    * a smaller-id same-cluster batch mate within `tau`), append verdicts
-    * to `verdictPath` and the batch's kept vectors to `storePath`. The
-    * kept rows are re-read from the just-written verdict parquet before
-    * the store append, so no plan ever reads and writes `storePath` in
-    * the same job. Centroids are the pre-trained model artifact
-    * ([[graft.operators.KMeansOps.fitSampled]] — at 100 TB you train the
-    * quantizer on a bounded sample before the stream starts).
-    *
-    * State is the store itself: kept vectors × (id + vec) — the curated
-    * corpus a production pipeline persists anyway, not engine state; the
-    * streaming query holds nothing between triggers. */
   /** STREAMING ingest curation — [[graft.operators.Pipeline.curateIncremental]]
     * as a foreachBatch sink: every micro-batch is judged against the
     * seed snapshot PLUS everything previously admitted, and ONE
@@ -316,43 +297,34 @@ object StreamingDedup {
       .start()
   }
 
-  /** True iff the store already holds rows at trigger `id` or later —
+  /** In-JVM high-water mark of batch ids appended to each store path by
+    * THIS process (r22), read by [[replaySuspected]]. The sink owns its
+    * store (the foreachBatch single-writer contract this file already
+    * assumes — a concurrent writer would corrupt the admission history
+    * regardless of this guard), so after ONE initializing scan the mark is
+    * exact. */
+  private val storeHwm = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+
+  /** True iff the store may already hold rows at trigger `id` or later —
     * this invocation MAY be a post-failure REPLAY. Spark's exactly-once
     * contract for foreachBatch is "same batchId, same data, caller
     * dedupes": after a driver restart the engine re-invokes the function
     * with the batchId it could not confirm, so an unguarded append
     * double-writes — and because these stores are read back as admission
     * history, the duplicates would poison every later trigger's verdicts,
-    * not just the audit log. This check alone cannot distinguish a replay
+    * not just the audit log. The check alone cannot distinguish a replay
     * from a FRESH query (new checkpoint) over an existing store, whose
-    * batchIds legitimately restart at 0 — so callers treat it as a cheap
-    * suspicion trigger (max over one BIGINT column is a parquet
-    * footer-stats scan) and confirm by content: anti-join the batch's ids
-    * against the store, so replayed rows vanish and genuinely new docs
-    * under a recycled batchId still land. Steady-state triggers (fresh,
-    * monotonically advancing batchIds) never pay the anti-join. */
-  private[graft] def storeHasBatch(spark: org.apache.spark.sql.SparkSession,
-                                   path: String, id: Long): Boolean = {
-    val row = spark.read.parquet(path).agg(max(col("batch_id"))).head()
-    !row.isNullAt(0) && row.getLong(0) >= id
-  }
-
-  /** In-JVM high-water mark of batch ids appended to each store path by
-    * THIS process (r22): steady-state triggers (fresh query, monotonically
-    * advancing batchIds) were documented as "never paying the anti-join",
-    * but every trigger over a non-empty store still paid the
-    * [[storeHasBatch]] footer-stats scan — one full Spark job per
-    * micro-batch of pure guard overhead. The sink owns its store (the
-    * foreachBatch single-writer contract this file already assumes — a
-    * concurrent writer would corrupt the admission history regardless of
-    * this guard), so after ONE initializing scan the mark is exact: a
-    * trigger with id above everything this JVM has seen or written cannot
-    * be a replay, and anything else falls back to the content anti-join
-    * exactly as before. A fresh JVM (post-failure restart — the replay
-    * case the guard exists for) starts with an empty map and pays the
-    * scan, same as the prior shape. */
-  private val storeHwm = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
+    * batchIds legitimately restart at 0 — so [[appendGuarded]] treats it
+    * as a suspicion trigger and confirms by content: anti-join the batch's
+    * ids against the store, so replayed rows vanish and genuinely new docs
+    * under a recycled batchId still land.
+    *
+    * The first call per store path in a JVM scans max(batch_id) (a
+    * parquet footer-stats scan, one Spark job); later calls compare
+    * against [[storeHwm]], so steady-state triggers (monotonically
+    * advancing batchIds) pay neither the scan nor the anti-join. A fresh
+    * JVM (post-failure restart — the replay case the guard exists for)
+    * starts with an empty map and pays the scan. */
   private def replaySuspected(spark: org.apache.spark.sql.SparkSession,
                               path: String, id: Long): Boolean = {
     val key = new java.io.File(path).getAbsolutePath
@@ -378,6 +350,34 @@ object StreamingDedup {
     d.exists() && Option(d.list()).exists(_.exists(!_.startsWith("_")))
   }
 
+  /** The replay-guarded append both sinks run per trigger: when the
+    * trigger may be a replay ([[replaySuspected]]) the batch's rows the
+    * store already holds (by `storeIdCol`) are dropped; if any row is
+    * left, `verdict(rows, hasStore)` is appended to `path` with a
+    * `batch_id` column. */
+  private def appendGuarded(batch: DataFrame, id: Long, path: String,
+                            idCol: String, storeIdCol: String)
+                           (verdict: (DataFrame, Boolean) => DataFrame): Unit = {
+    val spark = batch.sparkSession
+    val hasStore = storeNonEmpty(path)
+    val b =
+      if (hasStore && replaySuspected(spark, path, id))
+        batch.join(spark.read.parquet(path).select(col(storeIdCol).as(idCol)),
+          Seq(idCol), "left_anti")
+      else batch
+    if (!b.isEmpty) {
+      verdict(b, hasStore).withColumn("batch_id", lit(id))
+        .write.mode("append").parquet(path)
+      noteBatchWritten(path, id)
+    }
+  }
+
+  /** An empty relation with `df`'s schema — the store side before the
+    * first append. */
+  private def emptyLike(df: DataFrame): DataFrame =
+    df.sparkSession.createDataFrame(
+      df.sparkSession.sparkContext.emptyRDD[org.apache.spark.sql.Row], df.schema)
+
   /** The per-trigger body of [[curateSink]], exposed so the replay guard
     * is testable: invoking it twice at the same `id` must leave the store
     * identical (StreamingSpec pins this). */
@@ -401,37 +401,31 @@ object StreamingDedup {
                  langModel: Option[graft.operators.TextOps.LangNbModel] = None,
                  langAllow: Seq[String] = Seq("en"),
                  ruleParams: Option[graft.operators.QualityFilters.RuleParams] = None,
-                 piiRedactOutput: Boolean = false): Unit = {
-    val spark = batch.sparkSession
-    val b0 = batch.select(col(idCol), col(textCol))
-    val hasStore = storeNonEmpty(path)
-    val b =
-      if (hasStore && replaySuspected(spark, path, id))
-        b0.join(spark.read.parquet(path).select(col(idCol)), Seq(idCol), "left_anti")
-      else b0
-    if (!b.isEmpty) {
-      val admitted =
-        if (hasStore)
-          spark.read.parquet(path).filter(col("decision") === "kept")
-            .select(col(idCol), col("cleaned_text").as(textCol))
-        else spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], b.schema)
-      val history = seedHistory.select(col(idCol), col(textCol))
-        .unionByName(admitted)
-      // Under PII redaction the store's cleaned_text is MASKED, so
-      // fingerprinting it would miss a re-ingested duplicate of an
-      // admitted PII-bearing doc (r19 advice). The store persists the
-      // pre-redaction fingerprint per kept row; feed those back so the
-      // exact-vs-history verdict is invariant under masking. (The span/
-      // near cross stages still judge against the released text — masked
-      // tokens differ, so those stages are conservative under redaction;
-      // exact dedup is the stage the invariant names, and it is exact.)
-      val historyFps =
-        if (piiRedactOutput && hasStore)
-          Some(spark.read.parquet(path).filter(col("decision") === "kept")
-            .select(col("unredacted_fp").as("fp")))
-        else None
-      graft.operators.Pipeline.curateIncremental(
+                 piiRedactOutput: Boolean = false): Unit =
+    appendGuarded(batch.select(col(idCol), col(textCol)), id, path, idCol, idCol) {
+      (b, hasStore) =>
+        val spark = b.sparkSession
+        val admitted =
+          if (hasStore)
+            spark.read.parquet(path).filter(col("decision") === "kept")
+              .select(col(idCol), col("cleaned_text").as(textCol))
+          else emptyLike(b)
+        val history = seedHistory.select(col(idCol), col(textCol))
+          .unionByName(admitted)
+        // Under PII redaction the store's cleaned_text is MASKED, so
+        // fingerprinting it would miss a re-ingested duplicate of an
+        // admitted PII-bearing doc (r19 advice). The store persists the
+        // pre-redaction fingerprint per kept row; feed those back so the
+        // exact-vs-history verdict is invariant under masking. (The span/
+        // near cross stages still judge against the released text — masked
+        // tokens differ, so those stages are conservative under redaction;
+        // exact dedup is the stage the invariant names, and it is exact.)
+        val historyFps =
+          if (piiRedactOutput && hasStore)
+            Some(spark.read.parquet(path).filter(col("decision") === "kept")
+              .select(col("unredacted_fp").as("fp")))
+          else None
+        graft.operators.Pipeline.curateIncremental(
           history, b, embeddings, idCol, textCol,
           vecIdCol = vecIdCol, vecCol = vecCol,
           nearDupThreshold = nearDupThreshold, semTau = semTau,
@@ -443,14 +437,26 @@ object StreamingDedup {
           audio = audio, langModel = langModel, langAllow = langAllow,
           ruleParams = ruleParams, piiRedactOutput = piiRedactOutput,
           historyFps = historyFps)
-        .withColumn("batch_id", lit(id))
-        .write.mode("append").parquet(path)
-      noteBatchWritten(path, id)
     }
-    ()
-  }
 
-  /** One relation per trigger (the r16 `curateSink` layout): the verdict
+  /** Streaming SEMANTIC dedup (`foreachBatch`) against an accumulating
+    * kept-corpus parquet store — the streaming face of
+    * [[graft.operators.KMeansOps.incrementalSemDedup]], closing the
+    * streaming loop on the semantic family the way bloom dedup closes it
+    * for exact content.
+    *
+    * Per micro-batch: read the store snapshot (kept vectors only), run
+    * the incremental keep rule (dropped by any same-cluster STORE row or
+    * a smaller-id same-cluster batch mate within `tau`) and append the
+    * verdicts to `path`. Centroids are the pre-trained model artifact
+    * ([[graft.operators.KMeansOps.fitSampled]] — at 100 TB you train the
+    * quantizer on a bounded sample before the stream starts).
+    *
+    * State is the store itself: kept vectors × (id + vec) — the curated
+    * corpus a production pipeline persists anyway, not engine state; the
+    * streaming query holds nothing between triggers.
+    *
+    * One relation per trigger (the r16 `curateSink` layout): the verdict
     * rows carry their vectors and a `batch_id`, so a single append is
     * both the audit log (project id/cluster/kept/batch_id) and the
     * kept-corpus store (filter `kept`, project id + vector) — the
@@ -471,36 +477,23 @@ object StreamingDedup {
   }
 
   /** The per-trigger body of [[semDedupSink]], exposed so the replay
-    * guard ([[storeHasBatch]]) is testable in isolation. */
+    * guard ([[appendGuarded]]) is testable in isolation. */
   private[graft] def semDedupBatch(batch: DataFrame, id: Long,
                                    idCol: String, vecCol: String,
                                    centroids: Array[Array[Double]],
-                                   tau: Double, path: String): Unit = {
-    val spark = batch.sparkSession
-    val b0 = batch.select(col(idCol), col(vecCol))
-    val hasStore = storeNonEmpty(path)
-    val b =
-      if (hasStore && replaySuspected(spark, path, id))
-        b0.join(spark.read.parquet(path).select(col("id").as(idCol)),
-          Seq(idCol), "left_anti")
-      else b0
-    if (!b.isEmpty) {
-      val store =
-        if (hasStore)
-          spark.read.parquet(path).filter(col("kept"))
-            .select(col("id").as(idCol), col(vecCol))
-        else spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], b.schema)
-      graft.operators.KMeansOps
-        .incrementalSemDedup(store, b, idCol, vecCol, centroids, tau)
-        .join(b.select(col(idCol).as("__vid"), col(vecCol)),
-          col("id") === col("__vid"))
-        .drop("__vid")
-        .withColumn("batch_id", lit(id))
-        .localCheckpoint(eager = true)
-        .write.mode("append").parquet(path)
-      noteBatchWritten(path, id)
+                                   tau: Double, path: String): Unit =
+    appendGuarded(batch.select(col(idCol), col(vecCol)), id, path, idCol, "id") {
+      (b, hasStore) =>
+        val store =
+          if (hasStore)
+            b.sparkSession.read.parquet(path).filter(col("kept"))
+              .select(col("id").as(idCol), col(vecCol))
+          else emptyLike(b)
+        graft.operators.KMeansOps
+          .incrementalSemDedup(store, b, idCol, vecCol, centroids, tau)
+          .join(b.select(col(idCol).as("__vid"), col(vecCol)),
+            col("id") === col("__vid"))
+          .drop("__vid")
+          .localCheckpoint(eager = true)
     }
-    ()
-  }
 }

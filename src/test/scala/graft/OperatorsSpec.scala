@@ -1337,6 +1337,123 @@ class OperatorsSpec extends SparkTestBase {
     assert(off.values.forall(_ != "contaminated"), s"decisions with hook off: $off")
   }
 
+  // -- the curate drop chain's job surface -----------------------------
+
+  /** The job description of every job `body` runs, in submission order.
+    * Suites share one session, so jobs are matched by a local property
+    * set on this thread (threads `body` starts inherit it). */
+  private def jobDescriptions(body: => Unit): Seq[String] = {
+    val sc = spark.sparkContext
+    val tag = java.util.UUID.randomUUID().toString
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("graft.test.jobs") == tag)
+          seen.add(String.valueOf(e.properties.getProperty("spark.job.description")))
+    }
+    sc.addSparkListener(listener)
+    sc.setLocalProperty("graft.test.jobs", tag)
+    try body
+    finally {
+      sc.setLocalProperty("graft.test.jobs", null)
+      org.apache.spark.ListenerShim.drain(sc)
+      sc.removeSparkListener(listener)
+    }
+    seen.toArray(Array.empty[String]).toSeq
+  }
+
+  /** A q112-shaped curateFull call and a q115-shaped curateIncremental
+    * call (no optional stage; snapshot artifacts built inline) over the
+    * constructed fixtures of the two "decision lands" tests above; each
+    * returns its job descriptions. */
+  private def q112ShapedJobs(): Seq[String] = {
+    import spark.implicits._
+    val span = (1 to 30).map(i => s"shared$i").mkString(" ")
+    val near = (1 to 15).map(i => s"common$i").mkString(" ")
+    val corpus = Seq(
+      (0L, "s0", "alpha beta gamma delta epsilon zeta eta theta"),
+      (1L, "s1", "  alpha beta   gamma delta epsilon zeta eta theta "),
+      (2L, "s2", "   "),
+      (3L, "s3", s"prefix3a prefix3b $span suffix3a suffix3b"),
+      (4L, "s4", s"other4a other4b other4c $span tail4a tail4b tail4c"),
+      (5L, "s5", s"$near ending5"),
+      (6L, "s6", s"$near ending6"),
+      (7L, "s7", "doc seven body words here now"),
+      (8L, "s8", "doc eight body words here now two"),
+      (9L, "s9", "nine one two three four five six seven"),
+      (10L, "s9", "ten one two three four five six eight")
+    ).toDF("doc_id", "source", "text")
+    val embs = Seq(
+      7L -> Array(1f, 0f, 0f, 0f), 8L -> Array(1f, 0f, 0f, 0f),
+      0L -> Array(0f, 1f, 0f, 0f), 3L -> Array(0f, 0f, 1f, 0f),
+      4L -> Array(0f, 0f, 0f, 1f), 5L -> Array(0f, -1f, 0f, 0f),
+      9L -> Array(0f, 0f, -1f, 0f), 10L -> Array(0f, 0f, 0f, -1f))
+      .toDF("vec_id", "emb").withColumn("emb", col("emb").cast("array<float>"))
+    jobDescriptions(Pipeline.curateFull(corpus, embs, "doc_id", "text", "source",
+      vecIdCol = "vec_id", vecCol = "emb",
+      nearDupThreshold = 0.8, semK = 4, tokenBudget = 10L))
+  }
+
+  private def q115ShapedJobs(): Seq[String] = {
+    import spark.implicits._
+    val span = (1 to 30).map(i => s"hshared$i").mkString(" ")
+    val near = (1 to 15).map(i => s"hcommon$i").mkString(" ")
+    val history = Seq(
+      (0L, "history alpha beta gamma delta epsilon"),
+      (2L, s"hpre1 hpre2 $span hpost1 hpost2"),
+      (4L, s"$near hending4"),
+      (6L, "history six body words here now")
+    ).toDF("doc_id", "text")
+    val batch = Seq(
+      (1L, "  history alpha beta   gamma delta epsilon "),
+      (3L, s"bpre1 bpre2 bpre3 $span btail1 btail2"),
+      (5L, s"$near hending5"),
+      (7L, "batch seven body words here now"),
+      (9L, "fresh batch content nothing shared at all")
+    ).toDF("doc_id", "text")
+    val embs = Seq(
+      6L -> Array(1f, 0f, 0f, 0f), 7L -> Array(1f, 0f, 0f, 0f),
+      0L -> Array(0f, 1f, 0f, 0f), 2L -> Array(0f, 0f, 1f, 0f),
+      4L -> Array(0f, 0f, 0f, 1f), 3L -> Array(0f, -1f, 0f, 0f),
+      5L -> Array(0f, 0f, -1f, 0f), 9L -> Array(0f, 0f, 0f, -1f),
+      1L -> Array(0f, 0.5f, 0.5f, 0f)
+    ).toDF("vec_id", "emb").withColumn("emb", col("emb").cast("array<float>"))
+    jobDescriptions(Pipeline.curateIncremental(history, batch, embs, "doc_id", "text",
+      vecIdCol = "vec_id", vecCol = "emb", nearDupThreshold = 0.8, semK = 4))
+  }
+
+  test("curate stages run under curate/<stage> job descriptions, caller's restored") {
+    val sc = spark.sparkContext
+    sc.setJobDescription("caller")
+    try {
+      val full = q112ShapedJobs()
+      assert(sc.getLocalProperty("spark.job.description") == "caller")
+      val inc = q115ShapedJobs()
+      assert(sc.getLocalProperty("spark.job.description") == "caller")
+      assert(full.nonEmpty && full.forall(_.startsWith("curate/")), full.toString)
+      assert(inc.nonEmpty && inc.forall(_.startsWith("curate/")), inc.toString)
+      // stages run in chain order; a disabled stage runs no job
+      assert(full.distinct == Seq("curate/exact_dup", "curate/span", "curate/near_dup",
+        "curate/sem_dup", "curate/over_quota"), full.toString)
+      assert(inc.distinct == Seq("curate/exact_dup", "curate/span", "curate/near_dup",
+        "curate/sem_dup"), inc.toString)
+    } finally sc.setJobDescription(null)
+  }
+
+  test("curate job counts: q112- and q115-shaped calls run a pinned number of jobs") {
+    // the counts the hand-written stage loop ran before the drop chain
+    // replaced it: the chain adds no job and removes none. One warm-up
+    // call each first — the cross near-dup stage caches its shingle sets
+    // (never unpersisted), so the first call in a session over a given
+    // history runs an extra job that later calls read from the cache.
+    q112ShapedJobs()
+    q115ShapedJobs()
+    val full = q112ShapedJobs()
+    val inc = q115ShapedJobs()
+    assert(full.size == 36, full.toString)
+    assert(inc.size == 38, inc.toString)
+  }
+
   test("leakageFreeSplit: components share a split, no pair straddles, reproducible") {
     import spark.implicits._
     val docsDf = (0L to 30L).map(i => (i, s"doc $i")).toDF("doc_id", "text")

@@ -3,10 +3,13 @@
 
 Usage: python3 tools/joblog.py <decompressed-event-log> [--jobs]
 
-Maps every job to its SQL execution (description = the action callsite,
-e.g. `localCheckpoint at Pipeline.scala:334`) — the per-stage attribution
-tool for the curate* pipelines. Prints executions in submission order with
-job-wall totals, then an aggregate by callsite.
+Maps every job to its SQL execution and prints executions in submission
+order with job-wall totals, then an aggregate by description. An
+execution's description is the job description set when it ran, else the
+action callsite (e.g. `collect at KMeansOps.scala:189`). The curate*
+pipelines run every stage's jobs under `curate/<stage>` (`curate/exact_dup`,
+`curate/span`, `curate/near_dup`, ...), so the aggregate is the per-stage
+attribution of a curate run.
 """
 import json, sys, collections
 
@@ -67,7 +70,7 @@ for eid, wall, js, nj, desc in rows:
     agg[desc][0] += wall
     agg[desc][1] += js
     agg[desc][2] += 1
-print("\nBy callsite (total exec wall):")
+print("\nBy description (total exec wall):")
 for desc, (w, js, n) in sorted(agg.items(), key=lambda kv: -kv[1][0]):
     print(f"{w:8.2f}s jobsum={js:7.2f}s n={n:<3} {desc}")
 
