@@ -6,6 +6,14 @@ import org.apache.spark.sql.SparkSession
   * prints ONE JSON line. Results are fully materialized through the noop
   * sink (count() could let Catalyst skip computing projected columns). */
 object Bench {
+
+  /** `v` with `digits` decimals and a '.' separator whatever the JVM's
+    * default locale: every number in the emitted JSON goes through here
+    * (the `f` interpolator formats with the default locale, which writes
+    * a decimal comma under e.g. de_DE and breaks the JSON). */
+  private def fixed(v: Double, digits: Int): String =
+    String.format(java.util.Locale.ROOT, s"%.${digits}f", Double.box(v))
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
@@ -159,7 +167,7 @@ object Bench {
         name -> (if (ts.nonEmpty) ts else Vector(-1.0))
       }
       def fmt(f: Seq[Double] => Double): String = results
-        .map { case (k, ts) => "\"" + k + "\":" + f"${if (ts.head < 0) -1.0 else f(ts)}%.3f" }
+        .map { case (k, ts) => "\"" + k + "\":" + fixed(if (ts.head < 0) -1.0 else f(ts), 3) }
         .mkString("{", ",", "}")
       val total = results.collect { case (_, ts) if ts.head >= 0 => median(ts) }.sum
       // harness/operator split (r14 verdict #4): replay/index-lifecycle
@@ -190,7 +198,7 @@ object Bench {
       // budget accident (partial_sweep still flags those)
       val counts = names.map { case (n, _) => "\"" + n + "\":" + samples(n).size }
         .mkString("{", ",", "}")
-      f"""{"metric":"total_operator","value":$opTotal%.3f,"value_total":$total%.3f,"value_harness":$harnessTotal%.3f,"unit":"sec","queries":$qs,"queries_min":$qmin,"samples":$counts,"sweeps":$sweepsDone,"partial_sweep":$partialSweep,"heavy_sec":$heavySec%.1f,"heavy_iters":$heavyIters,"n_heavy":${heavy.size},"filter":$filterJson,"sf":"$sfDir"}"""
+      s"""{"metric":"total_operator","value":${fixed(opTotal, 3)},"value_total":${fixed(total, 3)},"value_harness":${fixed(harnessTotal, 3)},"unit":"sec","queries":$qs,"queries_min":$qmin,"samples":$counts,"sweeps":$sweepsDone,"partial_sweep":$partialSweep,"heavy_sec":${fixed(heavySec, 1)},"heavy_iters":$heavyIters,"n_heavy":${heavy.size},"filter":$filterJson,"sf":"$sfDir"}"""
     }
     // Persist the running result after EVERY completed sweep (atomic
     // tmp+rename): the r10 crash at sweep ~5 of 6 lost 41 minutes of
@@ -308,9 +316,9 @@ object Bench {
         }.groupBy(_._1).map { case (f, xs) => f -> xs.map(_._2).sum }
         .toSeq.sortBy(_._1)
       val famJson = famTotals
-        .map { case (f, s) => "\"" + f + "\":" + f"$s%.2f" }
+        .map { case (f, s) => "\"" + f + "\":" + fixed(s, 2) }
         .mkString("{", ",", "}")
-      println(f"""{"metric":"total_operator","value":$opTotal%.3f,"value_total":$total%.3f,"value_harness":$harnessTotal%.3f,"unit":"sec","sweeps":$sweepsDone,"partial_sweep":$partialSweep,"filter":$filterJson,"n_queries":${names.size},"families":$famJson,"bench_file":"$persistFile","sf":"$sfDir"}""")
+      println(s"""{"metric":"total_operator","value":${fixed(opTotal, 3)},"value_total":${fixed(total, 3)},"value_harness":${fixed(harnessTotal, 3)},"unit":"sec","sweeps":$sweepsDone,"partial_sweep":$partialSweep,"filter":$filterJson,"n_queries":${names.size},"families":$famJson,"bench_file":"$persistFile","sf":"$sfDir"}""")
     }
     System.out.flush()
   }

@@ -504,10 +504,22 @@ object Registration {
       checkFamilyTag("datasketch_bloom_union", "bloom", args.head)
       BloomUnionAgg(args.head)
     }
+    // the hot-path probe: one static call into the Bloom query lane the
+    // probe's type selects, so the enclosing scan filter stays inside
+    // whole-stage codegen
     val mightContain: (String, B) = "datasketch_bloom_might_contain" -> { args: Seq[Expression] =>
       arity("datasketch_bloom_might_contain", args, 2, 2)
       checkFamilyTag("datasketch_bloom_might_contain", "bloom", args.head)
-      BloomMightContain(args(0), args(1))
+      val lane = args(1).dataType match {
+        case LongType | IntegerType | ShortType | ByteType => "queryLong"
+        case DoubleType | FloatType => "queryDouble"
+        case StringType => "queryString"
+        case BinaryType => "queryBytes"
+        case other => bindErr(
+          s"datasketch_bloom_might_contain: unsupported probe type ${other.simpleString}")
+      }
+      graft.operators.Native("datasketch_bloom_might_contain", lane, BooleanType,
+        Seq(BinaryType, args(1).dataType), args, target = Bloom.getClass)
     }
     val meta = Seq("is_empty", "bits_used", "capacity", "num_hashes",
       "fill_percentage", "describe").map { fn =>
@@ -627,50 +639,38 @@ object Registration {
   /** Pipeline-operator scalars exposed under SQL names (beyond-reference;
     * Column-API implementations wrapped through the shim). */
   private val pipelineBuilders: Seq[(String, B)] = {
+    import org.apache.spark.sql.Column
     import org.apache.spark.sql.GraftShims.{column, toExpression}
-    def wrap1(name: String, f: org.apache.spark.sql.Column => org.apache.spark.sql.Column): (String, B) =
+    import graft.operators._
+    /** A fixed-arity row over a Column builder: `c(i)` is argument i as a
+      * column, `k(i)` argument i folded to a constant int. */
+    def row(name: String, n: Int)(f: (Int => Column, Int => Int) => Column): (String, B) =
       name -> { (args: Seq[Expression]) =>
-        arity(name, args, 1, 1)
-        toExpression(f(column(args.head)))
+        arity(name, args, n, n)
+        toExpression(f(i => column(args(i)), i => foldInt(args(i), name)))
       }
+    def wrap1(name: String, f: Column => Column): (String, B) =
+      row(name, 1)((c, _) => f(c(0)))
     Seq(
-      wrap1("graft_token_count", graft.operators.TextOps.tokenCount),
-      wrap1("graft_subword_count", graft.operators.TextOps.subwordCount),
-      wrap1("graft_stopword_ratio", graft.operators.TextOps.stopwordRatio),
-      wrap1("graft_quality_score", graft.operators.TextOps.qualityScore),
-      wrap1("graft_lang_id", graft.operators.TextOps.langId),
-      wrap1("graft_fingerprint", graft.operators.TextOps.fingerprint),
-      wrap1("graft_rolling_hash", graft.operators.TextOps.rollingHash),
-      "graft_simhash64" -> { (args: Seq[Expression]) =>
-        arity("graft_simhash64", args, 1, 1)
-        graft.operators.SimHash64(args.head)
-      },
-      "graft_token_stats" -> { (args: Seq[Expression]) =>
-        arity("graft_token_stats", args, 1, 1)
-        graft.operators.TokenStats(args.head)
-      },
-      "graft_shingle_set" -> { (args: Seq[Expression]) =>
-        arity("graft_shingle_set", args, 2, 2)
-        graft.operators.ShingleSet(args.head, foldInt(args(1), "graft_shingle_set"))
-      },
-      "graft_word_chunks" -> { (args: Seq[Expression]) =>
-        arity("graft_word_chunks", args, 2, 2)
-        graft.operators.WordChunks(args.head, foldInt(args(1), "graft_word_chunks"))
-      },
-      "graft_word_windows" -> { (args: Seq[Expression]) =>
-        arity("graft_word_windows", args, 2, 2)
-        graft.operators.WordWindows(args.head, foldInt(args(1), "graft_word_windows"))
-      },
-      "graft_term_runs" -> { (args: Seq[Expression]) =>
-        arity("graft_term_runs", args, 1, 1)
-        graft.operators.TermRuns(args.head)
-      },
+      wrap1("graft_token_count", TextOps.tokenCount),
+      wrap1("graft_subword_count", TextOps.subwordCount),
+      wrap1("graft_stopword_ratio", TextOps.stopwordRatio),
+      wrap1("graft_quality_score", TextOps.qualityScore),
+      wrap1("graft_lang_id", TextOps.langId),
+      wrap1("graft_fingerprint", TextOps.fingerprint),
+      wrap1("graft_rolling_hash", TextOps.rollingHash),
+      wrap1("graft_simhash64", DedupOps.simhash),
+      wrap1("graft_token_stats", TextOps.tokenStats),
+      row("graft_shingle_set", 2)((c, k) => DedupOps.shingleSet(c(0), k(1))),
+      row("graft_word_chunks", 2)((c, k) => ParagraphDedup.chunkArray(c(0), k(1))),
+      row("graft_word_windows", 2)((c, k) => ParagraphDedup.wordWindows(c(0), k(1))),
+      wrap1("graft_term_runs", TfIdf.termRuns),
       // Morton (z-order) key over 2-4 quantized BIGINT dims — the
       // multi-dimensional clustered-layout sort key
       "graft_zorder" -> { (args: Seq[Expression]) =>
-        arity("graft_zorder", args, 3, 1 + graft.operators.ZOrder.MaxDims)
+        arity("graft_zorder", args, 3, 1 + ZOrder.MaxDims)
         val bits = foldInt(args.head, "graft_zorder")
-        graft.operators.ZOrderKey(args.tail.map(Cast(_, LongType)), bits)
+        ZOrderKey(args.tail.map(Cast(_, LongType)), bits)
       },
       // bounded top-k-per-group aggregate (heap buffer, map-side combine)
       // — the scalable replacement for `row_number() OVER (...) <= k`
@@ -678,45 +678,26 @@ object Registration {
         arity("graft_topk_by", args, 3, 3)
         val k = foldInt(args.head, "graft_topk_by")
         if (k < 1) bindErr(s"graft_topk_by: k must be >= 1, got $k")
-        graft.operators.TopKByAgg(k,
+        TopKByAgg(k,
           Cast(args(1), DoubleType), Cast(args(2), LongType))
       },
-      "graft_gram_hashes" -> { (args: Seq[Expression]) =>
-        arity("graft_gram_hashes", args, 2, 2)
-        graft.operators.GramHashes(args.head, foldInt(args(1), "graft_gram_hashes"))
-      },
-      "graft_minhash_sig" -> { (args: Seq[Expression]) =>
-        arity("graft_minhash_sig", args, 2, 2)
-        graft.operators.MinHashSig(args.head, foldInt(args(1), "graft_minhash_sig"))
-      },
-      "graft_hamming64" -> { (args: Seq[Expression]) =>
-        arity("graft_hamming64", args, 2, 2)
-        toExpression(graft.operators.DedupOps.hamming(column(args(0)), column(args(1))))
-      },
-      "graft_cosine" -> { (args: Seq[Expression]) =>
-        arity("graft_cosine", args, 2, 2)
-        toExpression(graft.operators.SimilarityOps.cosine(column(args(0)), column(args(1))))
-      },
+      row("graft_gram_hashes", 2)((c, k) => SpanDedup.gramHashes(c(0), k(1))),
+      row("graft_minhash_sig", 2)((c, k) => DedupOps.minhashSig(c(0), k(1))),
+      row("graft_hamming64", 2)((c, _) => DedupOps.hamming(c(0), c(1))),
+      row("graft_cosine", 2)((c, _) => SimilarityOps.cosine(c(0), c(1))),
       // int8 quantization primitives — SQL face of operators.Quantize's
       // packed lane (CTAS a quantized index, re-rank with byte dots)
-      "graft_int8_pack" -> { (args: Seq[Expression]) =>
-        arity("graft_int8_pack", args, 2, 2)
-        graft.operators.Int8Pack(args(0), args(1))
-      },
-      "graft_int8_dot" -> { (args: Seq[Expression]) =>
-        arity("graft_int8_dot", args, 2, 2)
-        graft.operators.Int8Dot(args(0), args(1))
-      },
+      row("graft_int8_pack", 2)((c, _) => Quantize.int8Pack(c(0), c(1))),
+      row("graft_int8_dot", 2)((c, _) => Quantize.int8Dot(c(0), c(1))),
       // sign-bit LSH bucket signature — the SQL face of the ANN/near-dup
       // bucketing primitive, so SQL-only users can bucket/partition a
       // corpus (e.g. GROUP BY graft_lsh_signature(embedding, 12)) with
       // signatures identical to the Scala operators'
-      "graft_lsh_signature" -> { (args: Seq[Expression]) =>
-        arity("graft_lsh_signature", args, 2, 2)
-        val planes = foldInt(args(1), "graft_lsh_signature")
+      row("graft_lsh_signature", 2) { (c, k) =>
+        val planes = k(1)
         if (planes < 1 || planes > 63)
           bindErr(s"graft_lsh_signature: planes must be between 1 and 63, got $planes")
-        graft.operators.LshSignature(args.head, planes)
+        SimilarityOps.lshSignature(c(0), planes)
       },
 
       // The reference's 36 named sketch alias types, as a reinterpret

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, LongType, StringType}
 
 /** Deduplication operators for training-data pipelines, designed for the
   * 100 TB regime:
@@ -91,15 +92,18 @@ object DedupOps {
     * Each token is hashed once (`xxhash64`); a shingle's 64-bit id is the
     * xor-rotate combination of its k token hashes — no per-position string
     * slicing/concatenation, and nothing downstream ever carries text.
-    * Entirely map-side: no shuffle, no explode. Delegates to the native
-    * [[ShingleSet]] expression (see its scaladoc; the equivalent composed
-    * higher-order-function formulation, kept in [[shingleSetsArrayOps]],
-    * evaluates interpreted and is ~20× slower). */
-  def shingleSets(df: DataFrame, idCol: String, textCol: String, k: Int): DataFrame = {
-    import org.apache.spark.sql.GraftShims
-    df.select(col(idCol).as("doc"),
-        GraftShims.column(ShingleSet(GraftShims.expression(col(textCol)), k)).as("shset"))
+    * Entirely map-side: no shuffle, no explode. Runs the native
+    * [[shingleSet]] kernel (the equivalent composed higher-order-function
+    * formulation, kept in [[shingleSetsArrayOps]], evaluates interpreted
+    * and is ~20× slower). */
+  def shingleSets(df: DataFrame, idCol: String, textCol: String, k: Int): DataFrame =
+    df.select(col(idCol).as("doc"), shingleSet(col(textCol), k).as("shset"))
       .select(col("doc"), size(col("shset")).as("sz"), col("shset"))
+
+  /** Distinct k-shingle hash set of one text ([[GraftRuntime.shingleSet]]). */
+  private[graft] def shingleSet(text: Column, k: Int): Column = {
+    require(k >= 1, s"shingle size must be >= 1, got $k")
+    Native.call("shingle_set", "shingleSet", Native.Longs, k)(text -> StringType)
   }
 
   /** Reference formulation of [[shingleSets]] with pure array ops (kept
@@ -302,20 +306,18 @@ object DedupOps {
   def weightedJaccardPairs(df: DataFrame, idCol: String, textCol: String,
                            threshold: Double, maxTermDF: Int = 1000,
                            eager: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.GraftShims
-    // (doc, term-hash, tf) straight from the native one-pass TermRuns
+    // (doc, term-hash, tf) straight from the native one-pass term-runs
     // scan — the tf aggregation happens INSIDE the row, so no token
     // instance ever reaches an exchange (the r14 rewrite: the composed
     // explode+groupBy formulation shuffled every token occurrence and
     // floored 6× over baseline). Terms hash to 8-byte keys; note
-    // TermRuns lowercases, so similarity is case-insensitive.
+    // the term-runs kernel lowercases, so similarity is case-insensitive.
     // Cached at the most-derived-from point (the jaccardPairs precedent):
     // the hot-term aggregation, the anti-join probe, the tot aggregation,
     // and BOTH self-join sides all re-derive from these rows — uncached,
     // each consumer re-runs the text scan (measured 3× the query floor).
     val tf0 = df.select(col(idCol).cast("long").as("doc"),
-        explode(GraftShims.column(
-          TermRuns(GraftShims.expression(col(textCol))))).as("e"))
+        explode(TfIdf.termRuns(col(textCol))).as("e"))
       .select(col("doc"), xxhash64(col("e.term")).as("term"), col("e.tf").as("tf"))
       .cache()
     val tfs =
@@ -348,15 +350,11 @@ object DedupOps {
 
   /** MinHash signatures from shingle SETS: for each of `numHashes` seeded
     * hash functions, the min over the doc's shingle hashes. Entirely
-    * map-side, NO shuffle, one fused loop (native [[MinHashSig]]). */
-  def minhashSignatures(sets: DataFrame, numHashes: Int): DataFrame = {
-    import org.apache.spark.sql.GraftShims
-    val sig = GraftShims.column(
-      MinHashSig(GraftShims.expression(col("shset")), numHashes))
-    sets.select(col("doc"), sig.as("sig"))
+    * map-side, NO shuffle, one fused loop (native [[minhashSig]]). */
+  def minhashSignatures(sets: DataFrame, numHashes: Int): DataFrame =
+    sets.select(col("doc"), minhashSig(col("shset"), numHashes).as("sig"))
       .select(col("doc") +:
         (0 until numHashes).map(i => element_at(col("sig"), i + 1).as(s"h$i")): _*)
-  }
 
   /** Reference formulation of [[minhashSignatures]] (property-test pin). */
   private[graft] def minhashSignaturesArrayOps(sets: DataFrame, numHashes: Int): DataFrame = {
@@ -482,14 +480,18 @@ object DedupOps {
       .select(col("doc_a"), col("doc_b"), col("jaccard"))
   }
 
-  /** 64-bit SimHash over tokens: bit j of the result is the sign of
-    * Σ_tokens (bit j of xxhash64(token) ? +1 : -1). Delegates to the
-    * native [[SimHash64]] expression (single byte-scan per row; see its
-    * scaladoc for why this beats the composed array-ops formulation). */
-  def simhash(text: Column): Column = {
-    import org.apache.spark.sql.GraftShims
-    GraftShims.column(SimHash64(GraftShims.expression(text)))
+  /** MinHash signature of a shingle-hash set ([[GraftRuntime.minhashSig]]). */
+  private[graft] def minhashSig(shset: Column, numHashes: Int): Column = {
+    require(numHashes >= 1, s"numHashes must be >= 1, got $numHashes")
+    Native.call("minhash_sig", "minhashSig", Native.Longs, numHashes)(shset -> ArrayType(LongType))
   }
+
+  /** 64-bit SimHash over tokens: bit j of the result is the sign of
+    * Σ_tokens (bit j of xxhash64(token) ? +1 : -1). Runs the native
+    * [[GraftRuntime.simhash64]] kernel (single byte-scan per row; see its
+    * scaladoc for why this beats the composed array-ops formulation). */
+  def simhash(text: Column): Column =
+    Native.call("simhash64", "simhash64", LongType)(text -> StringType)
 
   /** Reference formulation of [[simhash]] with pure array ops (kept for
     * the property test that pins the native expression's semantics). */

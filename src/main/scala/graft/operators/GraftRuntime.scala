@@ -6,10 +6,12 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Shared runtime bodies for the native expressions — called both from
-  * interpreted `nullSafeEval` and from generated code (each expression's
-  * `doGenCode` emits a static call here, so whole-stage codegen spans stay
-  * unbroken instead of falling back to interpreted expression bridges). */
+/** Bodies of the native kernels. Each kernel is one static method here,
+  * exposed as a [[Native]] row: generated code calls it directly and
+  * interpreted evaluation reaches it through `StaticInvoke`, so
+  * whole-stage codegen spans stay unbroken instead of falling back to
+  * interpreted expression bridges. A null argument never reaches a body:
+  * the row returns null first. */
 object GraftRuntime {
 
   @inline private def isWs(b: Byte): Boolean =
@@ -17,8 +19,15 @@ object GraftRuntime {
 
   @inline private def rot5(a: Long): Long = (a << 5) | (a >>> 59)
 
-  // ---- DotProduct ---------------------------------------------------------
+  // ---- graft_dot ----------------------------------------------------------
 
+  /** Double-precision dot product of two float vectors. Bit-identical to
+    * the composed
+    * `aggregate(zip_with(a, b, (x, y) => x.cast(double) * y.cast(double)), 0.0, _ + _)`
+    * (same left-to-right fold order, so oracle-compared cosines don't
+    * move), but one fused loop instead of two interpreted higher-order
+    * passes — the pair loop of brute-force similarity search runs this
+    * millions of times. */
   def dot(x: ArrayData, y: ArrayData): Double = {
     val n = math.min(x.numElements(), y.numElements())
     var acc = 0.0
@@ -30,14 +39,16 @@ object GraftRuntime {
     acc
   }
 
-  // ---- Int8Pack / Int8Dot -------------------------------------------------
+  // ---- graft_int8_pack / graft_int8_dot -----------------------------------
 
   /** Pack a float vector into int8 codes at `scale` (= max|v|/127):
     * round-half-away-from-zero of v/scale, clamped to ±127, one byte per
     * element — the storage form of [[Quantize]]. `scale <= 0` (the zero
     * vector) packs all-zero codes. Rounding matches Spark/DuckDB
     * `round()` (away from zero), so packed codes equal the q80-oracled
-    * ARRAY<INT> lane byte-for-byte. */
+    * ARRAY<INT> lane byte-for-byte. Exactly dim bytes per vector instead
+    * of parquet-encoded INT32s — the layout a 100 TB ANN index wants on
+    * disk and through the shuffle. */
   def int8Pack(v: ArrayData, scale: Double): Array[Byte] = {
     val n = v.numElements()
     val out = new Array[Byte](n)
@@ -55,7 +66,9 @@ object GraftRuntime {
   }
 
   /** Fused signed-byte dot product — the re-rank inner loop over packed
-    * codes. Fits in a long: 127² × dim ≪ 2⁶³ for any real dim. */
+    * codes. Fits in a long: 127² × dim ≪ 2⁶³ for any real dim.
+    * Quantization scales cancel out of cosine (cos(s_a·a, s_b·b) =
+    * cos(a, b)), so ranking needs only these integer dots. */
   def int8Dot(a: Array[Byte], b: Array[Byte]): Long = {
     val n = math.min(a.length, b.length)
     var acc = 0L
@@ -67,8 +80,20 @@ object GraftRuntime {
     acc
   }
 
-  // ---- SimHash64 ----------------------------------------------------------
+  // ---- simhash64 ----------------------------------------------------------
 
+  /** Native 64-bit SimHash over whitespace tokens. Semantics match the
+    * composed-array-ops version ([[DedupOps.simhashArrayOps]]): token hash
+    * = Spark `xxhash64` (seed 42) over the token's UTF-8 bytes; bit j of
+    * the result = sign of Σ_tokens (bit j set ? +1 : -1); ties (vote 0)
+    * clear the bit; empty/blank input → 0.
+    *
+    * Why native: the composed version materializes a 64-long vote array
+    * per token per row through `aggregate`/`zip_with` codegen —
+    * O(tokens·64) array writes. This keeps the 64 counters in a local
+    * array across one byte-scan of the string; ~6× faster at sf0.1 and the
+    * difference grows with document length, so it is the version a
+    * 100 TB dedup pass would run. */
   def simhash64(s: UTF8String): Long = {
     val bytes = s.getBytes
     val votes = new Array[Int](64)
@@ -102,8 +127,22 @@ object GraftRuntime {
     }
   }
 
-  // ---- ShingleSet ---------------------------------------------------------
+  // ---- shingle_set --------------------------------------------------------
 
+  /** Distinct k-shingle hash set over whitespace tokens. Semantics match
+    * the composed-column formulation kept in
+    * [[DedupOps.shingleSetsArrayOps]]: token hash = `xxhash64` (seed 42)
+    * of the token bytes; shingle id = xor-rotate-5 fold of its k
+    * consecutive token hashes; docs with fewer than k tokens produce the
+    * single fold of all their tokens; result is the distinct set
+    * (first-occurrence order).
+    *
+    * Why native: the composed version nests three higher-order functions
+    * (`transform(sequence, i => aggregate(slice(...)))`) which evaluate
+    * interpreted with per-element boxing — ~1.1 ms/doc at sf0.1. This is
+    * a single byte-scan plus an insertion-ordered dedup table, ~20×
+    * faster, and the shingle step is the front of every dedup pipeline
+    * the engine runs at 100 TB. */
   def shingleSet(s: UTF8String, k: Int): ArrayData = {
     val bytes = s.getBytes
     val n = bytes.length
@@ -145,7 +184,7 @@ object GraftRuntime {
     new GenericArrayData(out)
   }
 
-  // ---- GramHashes ---------------------------------------------------------
+  // ---- gram_hashes --------------------------------------------------------
 
   /** Positional k-gram hashes over whitespace tokens: element `p` is the
     * xor-rotate-5 fold of the xxhash64 (seed 42) token hashes at positions
@@ -153,7 +192,15 @@ object GraftRuntime {
     * POSITION ORDER with no dedup, so a consumer can detect aligned
     * duplicated runs. Documents with fewer than k tokens produce an EMPTY
     * array (a span of length ≥ k cannot start in them), unlike
-    * [[shingleSet]]'s single whole-doc fold. */
+    * [[shingleSet]]'s single whole-doc fold.
+    *
+    * This is the map-side front of the duplicated-span detector
+    * ([[SpanDedup]]): one byte-scan per document, so the only thing that
+    * ever leaves the document scan is (doc, position, 8-byte gram id). The
+    * composed higher-order-function formulation (kept in
+    * [[SpanDedup.gramHashesArrayOps]]) evaluates interpreted with
+    * per-element boxing — the same ~20× penalty measured for
+    * [[shingleSet]]. */
   def gramHashes(s: UTF8String, k: Int): ArrayData = {
     val bytes = s.getBytes
     val n = bytes.length
@@ -186,7 +233,13 @@ object GraftRuntime {
     }
   }
 
-  // ---- WordChunks / WordWindows -------------------------------------------
+  // ---- word_chunks / word_windows -----------------------------------------
+  // Tokenize once, emit single-space-re-joined token groups. The composed
+  // formulations (`transform(sequence(...), i => array_join(slice(split(
+  // ...), ...)))`) embed the split inside the lambda, so interpreted
+  // evaluation re-splits the text once per emitted gram — O(len²/k) per
+  // document. These evaluate the text once and copy token bytes out of
+  // one array.
 
   /** Byte ranges (start, end) of whitespace-separated tokens. */
   private def tokenRanges(bytes: Array[Byte]): (Array[Int], Array[Int], Int) = {
@@ -233,7 +286,8 @@ object GraftRuntime {
     * partial chunk included; blank input → empty array. Equals
     * `transform(sequence(0, ceil(n/k)-1), i => array_join(slice(
     * split(trim(s), '\s+'), i*k+1, k), ' '))` without re-splitting the
-    * text once per chunk. */
+    * text once per chunk. The unit of paragraph-style dedup on corpora
+    * without newline structure ([[ParagraphDedup]]). */
   def wordChunks(s: UTF8String, k: Int): ArrayData = {
     val bytes = s.getBytes
     val (starts, ends, nTok) = tokenRanges(bytes)
@@ -251,7 +305,8 @@ object GraftRuntime {
   }
 
   /** Sliding k-token windows (full windows only), single-space
-    * re-joined; fewer than k tokens → empty array. */
+    * re-joined; fewer than k tokens → empty array — textual n-grams for
+    * boilerplate profiling (q67). */
   def wordWindows(s: UTF8String, k: Int): ArrayData = {
     val bytes = s.getBytes
     val (starts, ends, nTok) = tokenRanges(bytes)
@@ -267,7 +322,7 @@ object GraftRuntime {
     }
   }
 
-  // ---- TermRuns -----------------------------------------------------------
+  // ---- term_runs ----------------------------------------------------------
 
   /** Per-document (term, tf) pairs over the LOWERCASED whitespace tokens,
     * in sorted-term order — one lowercase, one tokenize, one sort, one
@@ -305,13 +360,22 @@ object GraftRuntime {
     }
   }
 
-  // ---- CharWindows --------------------------------------------------------
+  // ---- char_windows -------------------------------------------------------
 
   /** All k-code-point windows of a string, in order: element `i` equals
     * `substr(s, i+1, k)` (code-point semantics, matching Spark/DuckDB
     * substr). Strings shorter than k code points yield an empty array.
     * One pass: code-point byte offsets are walked once and windows are
-    * zero-copy-sliced out of one shared byte array. */
+    * zero-copy-sliced out of one shared byte array. The front of the
+    * char-n-gram operators (trigram LM scoring, DSIR weighting).
+    *
+    * Why native: the composed formulation
+    * `transform(sequence(1, length(t)-k+1), i => t.substr(i, k))` embeds
+    * the WHOLE argument expression `t` inside the lambda body, so an
+    * interpreted lambda re-evaluates it per element — for a normalized
+    * argument (`lower(regexp_replace(trim(text)))`) that is one regex pass
+    * per emitted window, O(len²) regex work per document. Here the
+    * argument evaluates once. */
   def charWindows(s: UTF8String, k: Int): ArrayData = {
     val bytes = s.getBytes
     val n = bytes.length
@@ -338,8 +402,14 @@ object GraftRuntime {
     }
   }
 
-  // ---- MinHashSig ---------------------------------------------------------
+  // ---- minhash_sig --------------------------------------------------------
 
+  /** MinHash signature over a shingle-hash set: element i = min over
+    * shingles s of `xxhash64(s, i)`, with the exact hash composition of the
+    * column form `xxhash64(col, lit(i))` (seed 42 → fold the long, then
+    * fold the int) — pinned by a property test against the composed
+    * `array_min(transform(...))` formulation, which evaluates `numHashes`
+    * interpreted passes per row. One fused loop here. */
   def minhashSig(arr: ArrayData, numHashes: Int): ArrayData = {
     val n = arr.numElements()
     val mins = Array.fill(numHashes)(Long.MaxValue)
@@ -357,7 +427,7 @@ object GraftRuntime {
     new GenericArrayData(mins)
   }
 
-  // ---- LshSignature -------------------------------------------------------
+  // ---- lsh_signature ------------------------------------------------------
 
   /** Hyperplane components, lazily materialized per plane index and grown
     * to the largest dimension seen. Component (p, j) is fully determined
@@ -392,14 +462,21 @@ object GraftRuntime {
     * `zip_with`/`aggregate` fold (same left-to-right summation order,
     * same per-component double arithmetic) on null-free vectors; two
     * DEFINED divergences, both pinned by tests:
-    *  - whole-null vector → null signature (the expression wrapper is
-    *    null-intolerant) where the composed form's `when` collapsed null
+    *  - whole-null vector → null signature (the [[Native]] row returns
+    *    null for a null argument) where the composed form's `when` collapsed null
     *    to 0 — a bucket-0 collision artifact, not a behavior to keep;
     *  - null ELEMENT → 0.0 contribution to every plane (sparse-vector
     *    reading; explicit isNullAt so the semantics cannot depend on an
     *    ArrayData implementation's null-slot representation), where the
     *    composed fold would null-poison the plane's projection into an
-    *    unconditional 0 bit. */
+    *    unconditional 0 bit. Zeroing one missing component keeps the other
+    *    dims' geometry; collapsing the whole plane to bit 0 would bucket
+    *    every null-containing vector together.
+    * One fused loop over a plane matrix memoized per executor, where the
+    * composed form re-derives every hyperplane component through an
+    * interpreted `xxhash64` lambda per element: this was the last
+    * interpreted higher-order-function hot path — every ANN probe and LSH
+    * near-dup pass pays planes × dim of it per corpus row. */
   def lshSignature(vec: ArrayData, planes: Int): Long = {
     val dim = vec.numElements()
     var sig = 0L
@@ -418,8 +495,19 @@ object GraftRuntime {
     sig
   }
 
-  // ---- TokenStats ---------------------------------------------------------
+  // ---- graft_token_stats --------------------------------------------------
 
+  /** One-scan token statistics for the text-analysis operators:
+    * `struct(n_tokens, n_chars, stop, en, es, de, fr)` where `stop` counts
+    * [[TokenStats.stopwords]] hits and the language fields count the
+    * per-language marker-word hits used by the language-ID heuristic.
+    * Token semantics match `TextOps.tokens` (trim + ASCII-whitespace
+    * split).
+    *
+    * Why native: `langId`/`qualityScore` as column compositions evaluate
+    * `split` + interpreted `filter` lambdas several times per row (no
+    * common-subexpression elimination across when/greatest chains). One
+    * byte-scan here. */
   def tokenStats(s: UTF8String): InternalRow = {
     val bytes = s.getBytes
     val n = bytes.length
@@ -443,7 +531,7 @@ object GraftRuntime {
     InternalRow(nTokens, nChars, stop, en, es, de, fr)
   }
 
-  // ---- RepetitionStats ----------------------------------------------------
+  // ---- graft_repetition_stats ---------------------------------------------
 
   private val Space = UTF8String.fromString(" ")
 
@@ -452,7 +540,13 @@ object GraftRuntime {
     * semantics (UTF8String equality — no hashing shortcut), matching the
     * composed `array_distinct` formulation token-for-token; bigram
     * identity is the space-joined pair, identical to `concat_ws(" ", ...)`
-    * (tokens cannot contain whitespace, so the join is injective). */
+    * (tokens cannot contain whitespace, so the join is injective).
+    *
+    * Why native: the composed form ([[QualityFilters.repetitionStatsArrayOps]])
+    * materializes the token array, a transformed bigram array, and two
+    * `array_distinct` copies per row — five short-lived arrays per
+    * document. This runs one byte scan with two hash sets and allocates
+    * only the token slices, the same discipline as [[tokenStats]]. */
   def repetitionStats(s: UTF8String): InternalRow = {
     val bytes = s.getBytes
     val n = bytes.length
@@ -652,7 +746,7 @@ object GraftRuntime {
     UTF8String.fromBytes(b)
   }
 
-  // ---- NearestCentroid ----------------------------------------------------
+  // ---- nearest_centroid(s) ------------------------------------------------
 
   /** Index of the centroid minimizing squared Euclidean distance to `v`.
     *
@@ -662,8 +756,14 @@ object GraftRuntime {
     * `cc(j) - 2·(v·c_j)` — the `v·v` term is constant across j, so it
     * never moves the argmin. Strict `<` keeps the LOWEST index on an
     * exact tie (mirroring the oracle's `ORDER BY dist, cl`). Null vector
-    * elements contribute 0.0 (the [[LshSignature]] sparse-null
-    * convention); a vector shorter than dim treats missing dims as 0. */
+    * elements contribute 0.0 (the [[lshSignature]] sparse-null
+    * convention); a vector shorter than dim treats missing dims as 0.
+    *
+    * The inner loop of Lloyd's k-means and of IVF-style coarse
+    * quantization. The matrix rides into generated code as an object
+    * literal (it is data-dependent, unlike [[lshSignature]]'s derivable
+    * plane matrix), so the per-row cost is one fused k·dim
+    * multiply-accumulate pass with no per-row allocation. */
   def nearestCentroid(v: ArrayData, flat: Array[Double], cc: Array[Double],
                       dim: Int): Int = {
     val k = cc.length
@@ -829,7 +929,7 @@ object GraftRuntime {
 
   /** BPE encode of a whitespace-pretokenized text: flat subword array /
     * fused count. The compiled model (merge table + per-word memo)
-    * rides into generated code via `addReferenceObj`; bodies live in
+    * rides into generated code as an object literal; bodies live in
     * [[Bpe]] next to the training loop they must mirror. */
   def bpeTokens(text: org.apache.spark.unsafe.types.UTF8String,
                 m: Bpe.Compiled): org.apache.spark.sql.catalyst.util.GenericArrayData =
@@ -840,7 +940,20 @@ object GraftRuntime {
     Bpe.runtimeTokenCount(text, m)
 
   /** Fused NB document score: (n_feat, nb_score_u) as one struct row —
-    * the whole explode→join→agg scoring plan per document. */
+    * the whole `explode(wordFeatures) → md5 bucket → broadcast-join lr
+    * table → groupBy(doc) integer sum` scoring plan per document.
+    *
+    * Bit-identical to the composed formulation (parity-pinned in the
+    * spec: same normalization (trim → `\s+`→' ' → UTF8String lowercase),
+    * same uni+bigram features, same md5-prefix bucket, same µ-quantized
+    * integer sum) — but the composed plan materialized ~2·tokens rows per
+    * document through explode, probed a broadcast HashedRelation per
+    * feature, and paid a hash aggregate to reassemble per-doc sums. At
+    * scoring scale that row machinery dominated the actual work (the q119
+    * sf0.1 watch: 1.5 s for ~5M feature rows); here the model is a
+    * `buckets`-sized long array riding into generated code as an object
+    * literal, the lookup is an array index, and the scoring pass has ZERO
+    * exchanges. */
   def nbDocScore(text: org.apache.spark.unsafe.types.UTF8String,
                  m: NbDocScore.Compiled): org.apache.spark.sql.catalyst.InternalRow = {
     val (n, s) = m.score(text)
@@ -901,7 +1014,7 @@ object GraftRuntime {
 
   /** Char-TRIGRAM bucket stream — [[nbFeatBuckets]]'s orthographic twin
     * for the multiclass lang-id fit/predict passes: md5-prefix bucket of
-    * every 3-code-point window of the normalized text (the CharWindows
+    * every 3-code-point window of the normalized text (the charWindows
     * slicing, the featBucket hash). Texts under 3 code points → empty. */
   def triBuckets(text: org.apache.spark.unsafe.types.UTF8String,
                  buckets: Int): ArrayData = {

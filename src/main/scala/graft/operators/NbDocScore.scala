@@ -1,50 +1,11 @@
 package graft.operators
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftShims.{column, toExpression}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native fused NB-document scorer: the whole
-  * `explode(wordFeatures) → md5 bucket → broadcast-join lr table →
-  * groupBy(doc) integer sum` plan collapsed to ONE per-row expression.
-  *
-  * Bit-identical to the composed formulation (parity-pinned in the
-  * spec: same normalization (trim → `\s+`→' ' → UTF8String lowercase),
-  * same uni+bigram features, same md5-prefix bucket, same µ-quantized
-  * integer sum) — but the composed plan materialized ~2·tokens rows per
-  * document through explode, probed a broadcast HashedRelation per
-  * feature, and paid a hash aggregate to reassemble per-doc sums. At
-  * scoring scale that row machinery dominated the actual work (the
-  * q119 sf0.1 watch: 1.5 s for ~5M feature rows); here the model is a
-  * `buckets`-sized long array riding into generated code via
-  * `addReferenceObj`, the lookup is an array index, and the scoring
-  * pass has ZERO exchanges. Generates a static call so whole-stage
-  * codegen spans stay unbroken. */
-case class NbDocScore(child: Expression, model: TextOps.NbModel)
-    extends UnaryExpression {
-
-  override def prettyName: String = "nb_doc_score"
-  override def dataType: DataType = NbDocScore.outType
-
-  @transient private lazy val compiled = NbDocScore.compile(model)
-
-  override protected def nullSafeEval(input: Any): Any =
-    GraftRuntime.nbDocScore(input.asInstanceOf[UTF8String], compiled)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("nbModel", NbDocScore.compile(model),
-      classOf[NbDocScore.Compiled].getName)
-    defineCodeGen(ctx, ev, a => s"graft.operators.GraftRuntime.nbDocScore($a, $ref)")
-  }
-
-  override protected def withNewChildInternal(c: Expression): Expression =
-    copy(child = c)
-}
-
+/** Naive-Bayes document scoring kernels: the compiled model form and
+  * the fused score / feature-bucket rows. */
 object NbDocScore {
 
   val outType: StructType = StructType(Seq(
@@ -107,55 +68,15 @@ object NbDocScore {
     new Compiled(m.buckets, m.priorU, table)
   }
 
+  /** Fused NB document score ([[GraftRuntime.nbDocScore]]). */
   def scoreCol(text: Column, model: TextOps.NbModel): Column =
-    column(NbDocScore(toExpression(text.cast("string")), model))
+    Native.call("nb_doc_score", "nbDocScore", outType, compile(model))(text.cast("string") -> StringType)
 
+  /** NB fit-side feature buckets ([[GraftRuntime.nbFeatBuckets]]). */
   def featBucketsCol(text: Column, buckets: Int): Column =
-    column(NbFeatBuckets(toExpression(text.cast("string")), buckets))
+    Native.call("nb_feat_buckets", "nbFeatBuckets", Native.Longs, buckets)(text.cast("string") -> StringType)
 
+  /** Char-trigram feature buckets ([[GraftRuntime.triBuckets]]). */
   def triBucketsCol(text: Column, buckets: Int): Column =
-    column(TriBuckets(toExpression(text.cast("string")), buckets))
-}
-
-/** Native feature-bucket stream — the FIT side of the NB pipeline fused:
-  * md5-prefix bucket ids (LONGs) of every uni+bigram feature of the
-  * normalized text. The composed `explode(wordFeatures) → md5 → conv →
-  * %` formulation runs its transform/element_at lambdas INTERPRETED
-  * (higher-order functions never enter whole-stage codegen), which
-  * dominated the q119/q122 fit pass; this emits the bucket array in one
-  * generated static call (r19; parity-pinned against the composed form
-  * in the spec and end-to-end by the q119/q122/q123 oracles). */
-case class NbFeatBuckets(child: Expression, buckets: Int)
-    extends UnaryExpression {
-  override def prettyName: String = "nb_feat_buckets"
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override protected def nullSafeEval(input: Any): Any =
-    GraftRuntime.nbFeatBuckets(input.asInstanceOf[UTF8String], buckets)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      a => s"graft.operators.GraftRuntime.nbFeatBuckets($a, $buckets)")
-
-  override protected def withNewChildInternal(c: Expression): Expression =
-    copy(child = c)
-}
-
-/** [[NbFeatBuckets]]'s orthographic twin: md5-prefix bucket ids of every
-  * 3-code-point window of the normalized text — the multiclass lang-id
-  * fit/predict feature stream, fused for the same reason. */
-case class TriBuckets(child: Expression, buckets: Int)
-    extends UnaryExpression {
-  override def prettyName: String = "tri_buckets"
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override protected def nullSafeEval(input: Any): Any =
-    GraftRuntime.triBuckets(input.asInstanceOf[UTF8String], buckets)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      a => s"graft.operators.GraftRuntime.triBuckets($a, $buckets)")
-
-  override protected def withNewChildInternal(c: Expression): Expression =
-    copy(child = c)
+    Native.call("tri_buckets", "triBuckets", Native.Longs, buckets)(text.cast("string") -> StringType)
 }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
 
 /** Paragraph-level (chunk-level) dedup with document reassembly — the
   * CCNet / RefinedWeb curation stage: split every document into
@@ -29,13 +30,21 @@ object ParagraphDedup {
 
   /** Per-document chunk array: fixed windows of `chunkWords` whitespace
     * tokens, single-space re-joined (the trailing chunk may be short).
-    * Blank documents produce an empty array. Native [[WordChunks]] —
-    * the composed transform+slice formulation (kept in
-    * [[chunkArrayOps]] as the property pin) re-splits the text once per
-    * chunk when the lambda evaluates interpreted. */
+    * Blank documents produce an empty array. Native
+    * [[GraftRuntime.wordChunks]] — the composed transform+slice
+    * formulation (kept in [[chunkArrayOps]] as the property pin) re-splits
+    * the text once per chunk when the lambda evaluates interpreted. */
   private[graft] def chunkArray(text: Column, chunkWords: Int): Column = {
-    import org.apache.spark.sql.GraftShims
-    GraftShims.column(WordChunks(GraftShims.expression(text), chunkWords))
+    require(chunkWords >= 1, s"gram size must be >= 1, got $chunkWords")
+    Native.call("word_chunks", "wordChunks", Native.Strings, chunkWords)(text -> StringType)
+  }
+
+  /** Sliding `k`-token windows, single-space re-joined (full windows
+    * only) — textual n-grams for boilerplate profiling (q67); native
+    * [[GraftRuntime.wordWindows]]. */
+  private[graft] def wordWindows(text: Column, k: Int): Column = {
+    require(k >= 1, s"gram size must be >= 1, got $k")
+    Native.call("word_windows", "wordWindows", Native.Strings, k)(text -> StringType)
   }
 
   /** Reference formulation of [[chunkArray]] (property-test pin). */

@@ -1,11 +1,8 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{BooleanType, DataType, DoubleType, IntegerType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{BooleanType, DoubleType, IntegerType, StringType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -37,12 +34,11 @@ object QualityFilters {
     * occurrences beyond the first (so dup/total is the duplicated
     * fraction). Integer-valued by design: downstream aggregates stay
     * exactly oracle-comparable (no float-summation order sensitivity).
-    * Native one-scan expression ([[RepetitionStats]]); the composed
-    * [[repetitionStatsArrayOps]] is the parity-tested reference shape. */
-  def repetitionStats(text: Column): Column = {
-    import org.apache.spark.sql.GraftShims
-    GraftShims.column(RepetitionStats(GraftShims.expression(text)))
-  }
+    * Native one-scan kernel ([[GraftRuntime.repetitionStats]]); the
+    * composed [[repetitionStatsArrayOps]] is the parity-tested reference
+    * shape. */
+  def repetitionStats(text: Column): Column =
+    Native.call("graft_repetition_stats", "repetitionStats", RepetitionStats.schema)(text -> StringType)
 
   /** Array-ops formulation of [[repetitionStats]] — kept as the unit-test
     * oracle for the native expression (five array allocations per row vs
@@ -61,7 +57,7 @@ object QualityFilters {
     * of its DISTINCT token n-grams occur in at least `minDf` documents
     * (shared boilerplate). Output: (doc, grams, shared_grams).
     *
-    * Gram identity rides the native [[ShingleSet]] fold (one byte scan
+    * Gram identity rides the native [[DedupOps.shingleSet]] fold (one byte scan
     * per doc emitting the distinct hashed n-gram set — the q35/q36
     * machinery and its no-collision regime) instead of materializing
     * string gram arrays; docs under n tokens are pre-filtered because the
@@ -155,16 +151,14 @@ object QualityFilters {
     *    (occurrences beyond first of a trimmed line),
     *  - `has_lorem` ("lorem ipsum" case-folded), `has_brace` ('{').
     *
-    * Native one-scan expression ([[RuleStats]] →
-    * [[GraftRuntime.ruleStats]]): the composed built-in formulation
+    * Native one-scan kernel ([[GraftRuntime.ruleStats]]): the composed
+    * built-in formulation
     * ([[ruleStatsArrayOps]], kept as the parity pin) evaluates ~10
     * higher-order array lambdas per row INTERPRETED — HOFs never enter
     * whole-stage codegen — which is real money on the gate's place in
     * the pipeline (the cheapest text stage, run over every raw doc). */
-  def ruleStats(text: Column): Column = {
-    import org.apache.spark.sql.GraftShims
-    GraftShims.column(RuleStats(GraftShims.expression(text)))
-  }
+  def ruleStats(text: Column): Column =
+    Native.call("graft_rule_stats", "ruleStats", RuleStats.schema)(text -> StringType)
 
   /** Built-in-composition formulation of [[ruleStats]] — the parity-test
     * reference for the native expression (NULL handling differs: the
@@ -247,7 +241,7 @@ object QualityFilters {
       (5 to 10).map(n => s"r_dup${n}_chars")
     // the repetition columns are always REPORTED (the audit's value is
     // seeing every signal); they join the rule_pass conjunction only
-    // when the params enable the tier — matching RuleGate exactly
+    // when the params enable the tier — matching rulePass exactly
     val pass = (ruleCols.map(r => col("__rv").getField(r)) ++
       (if (params.checkRepetition) repCols.map(r => col("__rpv").getField(r))
        else Nil)).reduce(_ && _)
@@ -261,8 +255,9 @@ object QualityFilters {
     withStats.select(out: _*)
   }
 
-  /** The gate verdict as ONE boolean expression ([[RuleGate]]): the
-    * conjunction of [[ruleVerdicts]] computed INSIDE the native scan.
+  /** The gate verdict as ONE boolean expression
+    * ([[GraftRuntime.rulePass]]): the conjunction of [[ruleVerdicts]]
+    * computed INSIDE the native scan.
     *
     * Why not `ruleReport(...).filter(!col("rule_pass"))` on the pipeline
     * path: predicate pushdown rewrites the filter condition in terms of
@@ -272,23 +267,20 @@ object QualityFilters {
     * eliminate, which is why the report path is fine). A single-field
     * verdict keeps the filter to ONE evaluation per row, pushed all the
     * way to the scan. Parity with the composed conjunction is
-    * spec-pinned; the threshold arithmetic is the same IEEE ops. */
-  def rulePass(text: Column, params: RuleParams = RuleParams()): Column = {
-    import org.apache.spark.sql.GraftShims
-    GraftShims.column(RuleGate(GraftShims.expression(text), params))
-  }
+    * spec-pinned; the threshold arithmetic is the same IEEE ops. The
+    * params ride into generated code as an object literal. */
+  def rulePass(text: Column, params: RuleParams = RuleParams()): Column =
+    Native.call("graft_rule_gate", "rulePass", BooleanType, params)(text -> StringType)
 
   /** Gopher §A1.1 repetition fractions as a 9-double struct (native
-    * [[RepFractions]] → [[GraftRuntime.repFractions]]): top n-gram
+    * [[GraftRuntime.repFractions]]): top n-gram
     * character fractions (n = 2..4, max-coverage tie-break — see the
     * runtime scaladoc for the documented deviation from the paper's
     * tie-ambiguous "most frequent") and duplicate n-gram character
     * fractions (n = 5..10, position-union coverage). Spec-pinned against
     * an independent Scala reference and the q162 SQL re-derivation. */
-  def repFractions(text: Column): Column = {
-    import org.apache.spark.sql.GraftShims
-    GraftShims.column(RepFractions(GraftShims.expression(text)))
-  }
+  def repFractions(text: Column): Column =
+    Native.call("graft_rep_fractions", "repFractions", RepFractions.schema)(text -> StringType)
 
   /** Per-rule verdicts over a [[repFractions]] struct (true = passes);
     * the repetition twin of [[ruleVerdicts]]. */
@@ -304,7 +296,7 @@ object QualityFilters {
     (rep.getField("dup10_frac") <= p.maxDup10GramCharRatio).as("r_dup10_chars"))
 
   /** [[repVerdicts]]' conjunction over a pre-computed fractions row —
-    * shared by the [[RuleGate]] runtime. */
+    * shared by the [[rulePass]] runtime. */
   private[operators] def repPasses(r: org.apache.spark.sql.catalyst.InternalRow,
                                    p: RuleParams): Boolean =
     r.getDouble(0) <= p.maxTop2GramCharRatio &&
@@ -354,64 +346,11 @@ object QualityFilters {
   }
 }
 
-/** Native one-scan Gopher/C4 rule counters — see
-  * [[QualityFilters.ruleStats]]. */
-case class RuleStats(child: Expression) extends UnaryExpression {
-  override def prettyName: String = "graft_rule_stats"
-  override def dataType: DataType = RuleStats.schema
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_rule_stats requires a string column, got ${child.dataType.simpleString}")
-  override protected def nullSafeEval(input: Any): Any =
-    GraftRuntime.ruleStats(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, a => s"graft.operators.GraftRuntime.ruleStats($a)")
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-}
-
-/** Native Gopher repetition fractions — see
-  * [[QualityFilters.repFractions]]. */
-case class RepFractions(child: Expression) extends UnaryExpression {
-  override def prettyName: String = "graft_rep_fractions"
-  override def dataType: DataType = RepFractions.schema
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_rep_fractions requires a string column, got ${child.dataType.simpleString}")
-  override protected def nullSafeEval(input: Any): Any =
-    GraftRuntime.repFractions(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, a => s"graft.operators.GraftRuntime.repFractions($a)")
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-}
-
 object RepFractions {
   val schema: StructType = StructType(
     (Seq("top2_frac", "top3_frac", "top4_frac") ++
       (5 to 10).map(n => s"dup${n}_frac"))
       .map(StructField(_, DoubleType, nullable = false)))
-}
-
-/** Native single-boolean Gopher/C4 gate verdict — see
-  * [[QualityFilters.rulePass]]. Thresholds ride into generated code via
-  * `addReferenceObj` (the Bpe-encode pattern). */
-case class RuleGate(child: Expression, params: QualityFilters.RuleParams)
-    extends UnaryExpression {
-  override def prettyName: String = "graft_rule_gate"
-  override def dataType: DataType = BooleanType
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_rule_gate requires a string column, got ${child.dataType.simpleString}")
-  override protected def nullSafeEval(input: Any): Any =
-    GraftRuntime.rulePass(input.asInstanceOf[UTF8String], params)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("ruleParams", params,
-      classOf[QualityFilters.RuleParams].getName)
-    defineCodeGen(ctx, ev, a => s"graft.operators.GraftRuntime.rulePass($a, $ref)")
-  }
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
 object RuleStats {
@@ -428,4 +367,12 @@ object RuleStats {
     StructField("n_dup_lines", IntegerType, nullable = false),
     StructField("has_lorem", BooleanType, nullable = false),
     StructField("has_brace", BooleanType, nullable = false)))
+}
+
+object RepetitionStats {
+  val schema: StructType = StructType(Seq(
+    StructField("tokens", IntegerType, nullable = false),
+    StructField("dup_tokens", IntegerType, nullable = false),
+    StructField("bigrams", IntegerType, nullable = false),
+    StructField("dup_bigrams", IntegerType, nullable = false)))
 }

@@ -27,7 +27,16 @@ import org.apache.spark.sql.functions._
   */
 object Sharding {
 
-  /** Per-document shard assignment: (doc, ntok, shard). */
+  /** Per-document shard assignment: (doc, ntok, shard).
+    *
+    * EAGER: this call runs Spark jobs before it returns. The range-
+    * partitioned (doc, ntok) relation is materialized with
+    * `localCheckpoint(eager = true)` — the range-bound sampling job plus
+    * the job that writes the blocks — so both scan branches read one
+    * pinned partition layout. The blocks are non-reliable (they live in
+    * executor block managers and are lost with their executor) and stay
+    * resident until the returned DataFrame's lineage is unreachable and
+    * `ContextCleaner` removes the checkpointed RDD. */
   def tokenShards(df: DataFrame, idCol: String, textCol: String,
                   budget: Long,
                   tokenCounter: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
@@ -77,7 +86,12 @@ object Sharding {
     * (the scorer's own domain rule — e.g. blank docs under the trigram
     * LM); same two-level distributed scan, same byte-identical-to-
     * global-window contract, just a different range key. Output:
-    * (doc, scoreCol, ntok, shard). */
+    * (doc, scoreCol, ntok, shard).
+    *
+    * EAGER, like [[tokenShards]]: before it returns, the call runs the
+    * range sampling and a `localCheckpoint(eager = true)` of the ranged
+    * relation (which executes the score join); those blocks stay
+    * resident until `ContextCleaner` collects the checkpointed RDD. */
   def curriculumShards(df: DataFrame, idCol: String, textCol: String,
                        scores: DataFrame, budget: Long,
                        scoreCol: String = "lm_score_u"): DataFrame = {
@@ -179,7 +193,12 @@ object Sharding {
     * emitted tokens ≤ totalBudget + one doc per source), so the
     * exploded relation is budget-sized, not corpus×epochs-sized;
     * everything else is the [[curriculumShards]] scan on the md5 key.
-    * Output: (doc, copy_idx, ntok, shard). */
+    * Output: (doc, copy_idx, ntok, shard).
+    *
+    * EAGER, like [[tokenShards]]: before it returns, the call runs the
+    * range sampling and a `localCheckpoint(eager = true)` of the exploded
+    * copies (which executes the whole epoch-mixture plan); those blocks
+    * stay resident until `ContextCleaner` collects the checkpointed RDD. */
   def trainingOrder(df: DataFrame, sourceCol: String, idCol: String,
                     textCol: String, weights: Seq[(String, Double)],
                     totalBudget: Long, shardBudget: Long): DataFrame = {

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType}
 
 /** Approximate-nearest-neighbor / similarity search over embedding columns
   * (`Array[Float]`).
@@ -24,12 +25,10 @@ import org.apache.spark.sql.functions._
 object SimilarityOps {
 
   /** Double-precision dot product of two float vectors (native
-    * [[DotProduct]]; bit-identical to the composed zip_with/aggregate
+    * [[GraftRuntime.dot]]; bit-identical to the composed zip_with/aggregate
     * fold, pinned by a property test). */
-  def dot(a: Column, b: Column): Column = {
-    import org.apache.spark.sql.GraftShims
-    GraftShims.column(DotProduct(GraftShims.expression(a), GraftShims.expression(b)))
-  }
+  def dot(a: Column, b: Column): Column =
+    Native.call("graft_dot", "dot", DoubleType)(a -> Native.Floats, b -> Native.Floats)
 
   /** Reference formulation of [[dot]] (property-test pin). */
   private[graft] def dotArrayOps(a: Column, b: Column): Column =
@@ -62,11 +61,13 @@ object SimilarityOps {
   }
 
   /** Sign-bit signature of a vector against `planes` deterministic
-    * pseudo-random hyperplanes (native [[LshSignature]]; bit-identical to
-    * the composed zip_with/aggregate folds, pinned by a property test). */
+    * pseudo-random hyperplanes (native [[GraftRuntime.lshSignature]];
+    * bit-identical to the composed zip_with/aggregate folds, pinned by a
+    * property test). */
   def lshSignature(vec: Column, planes: Int): Column = {
-    import org.apache.spark.sql.GraftShims
-    GraftShims.column(LshSignature(GraftShims.expression(vec), planes))
+    require(planes >= 1 && planes <= 63,
+      s"planes must be in [1, 63] (sign bits packed into one long), got $planes")
+    Native.call("lsh_signature", "lshSignature", LongType, planes)(vec -> Native.Floats)
   }
 
   /** Deterministic pseudo-random hyperplane component: plane `p`,

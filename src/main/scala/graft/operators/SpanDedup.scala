@@ -3,13 +3,14 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
 
 /** Exact duplicated-span detection across documents — the
   * suffix-array-style "exact substring dedup" of training-data curation
   * (find every maximal run of ≥ minSpan tokens shared verbatim between two
   * documents), re-expressed as a shuffle-friendly Spark plan:
   *
-  *  1. positional k-gram hashes per document (native [[GramHashes]] —
+  *  1. positional k-gram hashes per document (native [[gramHashes]] —
   *     one byte-scan, map-side, whole-stage codegen'd);
   *  2. ONE shuffle groups the gram mass by gram id into per-gram
   *     occurrence lists via the size-bounded [[BoundedOccListAgg]];
@@ -36,16 +37,20 @@ object SpanDedup {
 
   /** Positional gram relation: (doc, pos, g) — one row per k-gram start
     * position. Docs with fewer than k tokens contribute nothing. */
-  def gramRelation(df: DataFrame, idCol: String, textCol: String, k: Int): DataFrame = {
-    import org.apache.spark.sql.GraftShims
-    df.select(col(idCol).as("doc"),
-        GraftShims.column(GramHashes(GraftShims.expression(col(textCol)), k)).as("ga"))
+  def gramRelation(df: DataFrame, idCol: String, textCol: String, k: Int): DataFrame =
+    df.select(col(idCol).as("doc"), gramHashes(col(textCol), k).as("ga"))
       .select(col("doc"), posexplode(col("ga")))
       .select(col("doc"), col("pos").cast("long").as("pos"), col("col").as("g"))
+
+  /** Positional k-gram hash array of one text — the map-side front of the
+    * span detector ([[GraftRuntime.gramHashes]]). */
+  private[graft] def gramHashes(text: Column, k: Int): Column = {
+    require(k >= 1, s"gram size must be >= 1, got $k")
+    Native.call("gram_hashes", "gramHashes", Native.Longs, k)(text -> StringType)
   }
 
   /** Reference formulation of the positional gram array with pure array
-    * ops (kept for the property test pinning [[GramHashes]] semantics). */
+    * ops (kept for the property test pinning [[gramHashes]] semantics). */
   private[graft] def gramHashesArrayOps(text: Column, k: Int): Column = {
     val th = transform(TextOps.tokens(text), t => xxhash64(t))
     val n = size(th)

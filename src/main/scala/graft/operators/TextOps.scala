@@ -2,6 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Text-analysis operators for large-scale training-data pipelines.
   *
@@ -16,13 +18,11 @@ object TextOps {
     when(length(trim(text)) === 0, array().cast("array<string>"))
       .otherwise(split(trim(text), "\\s+"))
 
-  /** One-scan token statistics (native [[TokenStats]] expression); the
+  /** One-scan token statistics (native [[GraftRuntime.tokenStats]]); the
     * shared input for tokenCount/stopwordRatio/qualityScore/langId so a
     * row is tokenized once, not once per metric. */
-  def tokenStats(text: Column): Column = {
-    import org.apache.spark.sql.GraftShims
-    GraftShims.column(TokenStats(GraftShims.expression(text)))
-  }
+  def tokenStats(text: Column): Column =
+    Native.call("graft_token_stats", "tokenStats", TokenStats.schema)(text -> StringType)
 
   /** Token count (whitespace tokenizer). */
   def tokenCount(text: Column): Column = tokenStats(text).getField("n_tokens")
@@ -95,14 +95,13 @@ object TextOps {
     lower(regexp_replace(trim(text), "\\s+", " "))
 
   /** Character trigrams of the normalized text (empty for texts shorter
-    * than 3 chars). Normalization runs ONCE as the native expression's
-    * child; windows are zero-copy slices (see [[CharWindows]] for why
-    * the composed transform+substr formulation — kept in
-    * [[charTrigramsArrayOps]] as the property-test pin — is O(len²)). */
-  def charTrigrams(text: Column): Column = {
-    import org.apache.spark.sql.GraftShims
-    GraftShims.column(CharWindows(GraftShims.expression(normText(text)), 3))
-  }
+    * than 3 chars). Normalization runs ONCE as the native kernel's
+    * argument; windows are zero-copy slices (see
+    * [[GraftRuntime.charWindows]] for why the composed transform+substr
+    * formulation — kept in [[charTrigramsArrayOps]] as the property-test
+    * pin — is O(len²)). */
+  def charTrigrams(text: Column): Column =
+    Native.call("char_windows", "charWindows", Native.Strings, 3)(normText(text) -> StringType)
 
   /** Reference formulation of [[charTrigrams]] with pure built-ins
     * (property-test pin for the native expression). */
@@ -320,7 +319,7 @@ object TextOps {
     // parquet read + job per fit, ~8 fixed-cost jobs across the q122
     // pipeline) disappears. Counts are identical by construction: same
     // rows, same keys.
-    // r19: the feature stream is the fused [[NbFeatBuckets]] expression.
+    // r19: the feature stream is the fused [[NbDocScore.featBucketsCol]] kernel.
     // The composed explode(wordFeatures) -> md5 -> conv chain ran its
     // higher-order lambdas INTERPRETED (HOFs never enter whole-stage
     // codegen) and dominated the pass -- 2.2 s of q119's 2.7 s at
@@ -331,7 +330,7 @@ object TextOps {
 
   /** The pre-r19 composed fit (explode(wordFeatures) -> md5-prefix
     * bucket in the plan) -- the executable parity reference for
-    * [[NbFeatBuckets]]: the fused fit must emit the identical model
+    * [[NbDocScore.featBucketsCol]]: the fused fit must emit the identical model
     * (spec-pinned, multibyte corpora included). */
   private[graft] def seedCrawlNbFitComposed(seed: DataFrame, crawl: DataFrame,
                                             textCol: String = "text",
@@ -411,7 +410,7 @@ object TextOps {
 
   /** The pre-r17 composed scoring plan (explode → md5 bucket →
     * broadcast-join the lr table → per-doc integer sum) — kept as the
-    * parity oracle for [[NbDocScore]]: the fused expression must
+    * parity oracle for [[NbDocScore.scoreCol]]: the fused expression must
     * reproduce it row-for-row (spec-pinned). The composed shape paid
     * ~2·tokens exploded rows, a join probe per feature, and a hash
     * aggregate per scoring pass; the fused expression is one map. */
@@ -623,4 +622,37 @@ object TextOps {
                         idCol: String = "doc_id", textCol: String = "text",
                         buckets: Int = 4096): DataFrame =
     nbScore(seedCrawlNbFit(seed, crawl, textCol, buckets), docs, idCol, textCol)
+}
+
+/** Result schema and word lists of the [[TextOps.tokenStats]] kernel:
+  * `stop` counts stopword hits, the language fields count the
+  * per-language marker words the language-ID heuristic uses. */
+object TokenStats {
+  val schema: StructType = StructType(Seq(
+    StructField("n_tokens", IntegerType, nullable = false),
+    StructField("n_chars", IntegerType, nullable = false),
+    StructField("stop", IntegerType, nullable = false),
+    StructField("en", IntegerType, nullable = false),
+    StructField("es", IntegerType, nullable = false),
+    StructField("de", IntegerType, nullable = false),
+    StructField("fr", IntegerType, nullable = false)))
+
+  /** Must stay in sync with TextOps.stopwords / TextOps.langMarkers. */
+  val stopwords: Seq[String] = Seq("the", "a", "of", "and", "to", "in", "is", "it")
+  val markers: Map[String, Seq[String]] = Map(
+    "en" -> Seq("the", "a", "of", "and", "to", "is"),
+    "es" -> Seq("el", "la", "de", "que", "y", "los"),
+    "de" -> Seq("der", "die", "das", "und", "ist", "ein"),
+    "fr" -> Seq("le", "la", "les", "et", "est", "une"))
+
+  private def toSet(ws: Seq[String]): java.util.HashSet[UTF8String] = {
+    val s = new java.util.HashSet[UTF8String](ws.size * 2)
+    ws.foreach(w => s.add(UTF8String.fromString(w)))
+    s
+  }
+  private[operators] val stopSet = toSet(stopwords)
+  private[operators] val enSet = toSet(markers("en"))
+  private[operators] val esSet = toSet(markers("es"))
+  private[operators] val deSet = toSet(markers("de"))
+  private[operators] val frSet = toSet(markers("fr"))
 }

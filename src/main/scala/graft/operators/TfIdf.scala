@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType, StructField, StructType}
 
 /** Corpus-statistics scoring for training-data curation: BM25 relevance
   * against a bounded query-term set, full-vocabulary TF-IDF salient-term
@@ -12,7 +13,7 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape, in the order the 100 TB audit cares about:
   *   - Per-document term frequencies never shuffle token instances: the
-  *     (term, tf) pairs are built map-side by the native [[TermRuns]]
+  *     (term, tf) pairs are built map-side by the native [[termRuns]]
   *     expression (one sorted-run scan, O(n log n) per doc, whole-stage
   *     codegen'd) — the explode carries one row per DISTINCT term per
   *     doc, not one per token.
@@ -34,13 +35,16 @@ object TfIdf {
       .otherwise(split(lower(trim(text)), "\\s+"))
 
   /** Per-document (term, tf) pairs as `array<struct<term,tf>>` in sorted
-    * term order, computed WITHOUT a shuffle by the native [[TermRuns]]
-    * expression (one lowercase → tokenize → sort → run-length scan per
-    * document, whole-stage codegen'd). */
-  def termRuns(text: Column): Column = {
-    import org.apache.spark.sql.GraftShims
-    GraftShims.column(TermRuns(GraftShims.expression(text)))
-  }
+    * term order, computed WITHOUT a shuffle by the native
+    * [[GraftRuntime.termRuns]] kernel (one lowercase → tokenize → sort →
+    * run-length scan per document, whole-stage codegen'd). */
+  def termRuns(text: Column): Column =
+    Native.call("term_runs", "termRuns", TermRunsType)(text -> StringType)
+
+  /** `array<struct<term, tf>>`, the [[termRuns]] result type. */
+  private val TermRunsType: DataType = ArrayType(
+    StructType(Seq(StructField("term", StringType, nullable = false),
+      StructField("tf", LongType, nullable = false))), containsNull = false)
 
   /** Composed reference formulation of [[termRuns]] over a pre-split
     * token array — run boundaries from a filtered index sequence. Its

@@ -2,8 +2,7 @@ package graft.sketch
 
 import org.apache.datasketches.filters.bloomfilter.{BloomFilter, BloomFilterBuilder}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -65,7 +64,10 @@ object Bloom {
     }
   }
 
-  // Static entry points for generated code (one per hash-type lane).
+  /** `datasketch_bloom_might_contain`'s static entry points, one per
+    * hash-type lane; the SQL builder picks the lane from the probe's type.
+    * A static call keeps the enclosing scan filter inside whole-stage
+    * codegen — the hot path of join pruning. */
   def queryLong(blob: Array[Byte], v: Long): Boolean = cached(blob).query(v)
   def queryDouble(blob: Array[Byte], v: Double): Boolean = cached(blob).query(v)
   def queryString(blob: Array[Byte], v: UTF8String): Boolean = cached(blob).query(v.getBytes)
@@ -178,60 +180,6 @@ case class BloomUnionAgg(
 object BloomUnionAgg {
   final class Buf(var f: BloomFilter)
 }
-
-/** `datasketch_bloom_might_contain(sk, v)` — the hot-path probe, fully
-  * codegen'd: a static call into the per-type [[Bloom]] query lanes keeps
-  * the enclosing scan filter inside whole-stage codegen (the same
-  * discipline as the five native text/vector expressions). */
-case class BloomMightContain(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def prettyName: String = "datasketch_bloom_might_contain"
-  override def dataType: DataType = BooleanType
-
-  /** (runtime lane suffix, probe cast) chosen from the probe's type. */
-  private lazy val lane: String = right.dataType match {
-    case LongType | IntegerType | ShortType | ByteType => "Long"
-    case DoubleType | FloatType                        => "Double"
-    case StringType                                    => "String"
-    case BinaryType                                    => "Bytes"
-    case other => throw new GraftBloomTypeException(
-      s"datasketch_bloom_might_contain: unsupported probe type ${other.simpleString}")
-  }
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    if (left.dataType != BinaryType)
-      return org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"$prettyName: first argument must be a bloom filter BLOB")
-    try { lane; org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess }
-    catch { case e: GraftBloomTypeException =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(e.getMessage) }
-  }
-
-  override protected def nullSafeEval(blob: Any, v: Any): Any = {
-    val b = blob.asInstanceOf[Array[Byte]]
-    lane match {
-      case "Long"   => Bloom.queryLong(b, v.asInstanceOf[Number].longValue())
-      case "Double" => Bloom.queryDouble(b, v.asInstanceOf[Number].doubleValue())
-      case "String" => Bloom.queryString(b, v.asInstanceOf[UTF8String])
-      case "Bytes"  => Bloom.queryBytes(b, v.asInstanceOf[Array[Byte]])
-    }
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cast = lane match {
-      case "Long" => "(long) "
-      case "Double" => "(double) "
-      case _ => ""
-    }
-    defineCodeGen(ctx, ev, (b, v) => s"graft.sketch.Bloom.query$lane($b, $cast$v)")
-  }
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
-}
-
-private[sketch] class GraftBloomTypeException(msg: String) extends IllegalArgumentException(msg)
 
 /** Bloom metadata probes (`is_empty`, `bits_used`, `capacity`,
   * `num_hashes`, `fill_percentage`, `describe`) — cold-path scalars on the

@@ -1,6 +1,8 @@
 package org.apache.spark.sql
 
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression}
+import org.apache.spark.sql.types.DataType
 
 /** Column ⇄ Expression bridge. Spark 4 made the Column internals
   * `private[sql]`; this shim is the single sanctioned crossing point for
@@ -18,6 +20,13 @@ object GraftShims {
     * the analyzer's next pass. */
   def toExpression(c: Column): Expression =
     classic.ColumnNodeToExpressionConverter.apply(c.node)
+
+  /** `ExpectsInputTypes`' check (exact types up to nullability, no
+    * implicit casts, the standard UNEXPECTED_INPUT_TYPE error) for
+    * expressions outside `sql`, where its input-type base class is not
+    * visible. */
+  def checkInputTypes(inputs: Seq[Expression], types: Seq[DataType]): TypeCheckResult =
+    ExpectsInputTypes.checkInputDataTypes(inputs, types)
 
   /** InternalRow RDD → DataFrame (private[sql] in Spark 4). Used by
     * operators that need explicit partition placement (e.g. identity

@@ -535,9 +535,10 @@ class PropertiesSpec extends SparkTestBase {
     import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
     import org.apache.spark.sql.types.StringType
     import org.apache.spark.unsafe.types.UTF8String
+    import org.apache.spark.sql.GraftShims.{column, toExpression}
     val params = operators.QualityFilters.RuleParams(checkRepetition = true)
-    val gate = operators.RuleGate(
-      BoundReference(0, StringType, nullable = true), params)
+    val gate = toExpression(operators.QualityFilters.rulePass(
+      column(BoundReference(0, StringType, nullable = true)), params))
     val proj = GenerateUnsafeProjection.generate(Seq(Alias(gate, "ok")()))
     val texts = Seq(
       "the words be to of and that have with " + ("alpha beta " * 40),
@@ -547,6 +548,132 @@ class PropertiesSpec extends SparkTestBase {
       val compiled = proj(row).getBoolean(0)
       val interpreted = gate.eval(row).asInstanceOf[Boolean]
       assert(compiled == interpreted, s"codegen/interpreted split on: $t")
+    }
+  }
+
+  test("every Native kernel row: generated code compiles and equals interpreted eval") {
+    // One row per kernel. Each row's Native is taken from the public
+    // builder (SQL builder for the bloom lanes) and re-rooted over
+    // BoundReferences; GenerateUnsafeProjection compiles the Java source
+    // directly, so a Janino error throws here instead of silently
+    // falling back to interpreted evaluation.
+    import org.apache.spark.sql.Column
+    import org.apache.spark.sql.GraftShims.toExpression
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{Alias, BoundReference, Expression,
+      InterpretedUnsafeProjection}
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import org.apache.spark.sql.types._
+    import org.apache.spark.unsafe.types.UTF8String
+    import operators._
+
+    def rooted(e: Expression, types: DataType*): Native = (e match {
+      case Alias(n: Native, _) => n
+      case n: Native => n
+    }).withNewChildren(types.zipWithIndex.map { case (t, i) =>
+      BoundReference(i, t, nullable = true) }).asInstanceOf[Native]
+    def kernel(c: Column, types: DataType*): Native = rooted(toExpression(c), types: _*)
+    def bloomLane(probe: String, t: DataType): Native = rooted(
+      sql(s"SELECT datasketch_bloom_might_contain(CAST(NULL AS BINARY), CAST(NULL AS $probe)) AS p")
+        .queryExecution.analyzed.expressions.head, BinaryType, t)
+
+    // seeded inputs per argument: null, empty, blank, multibyte and
+    // emoji, PII shapes, long text; null/empty/zero/short/null-element
+    // vectors; PQ tables and codes that fit the model; valid bloom blobs
+    val r = new Random(20261018)
+    val strings: Seq[UTF8String] = (Seq(null, "", "   \t\n ",
+      "caf\u00e9 na\u00efve \u4f60\u597d \ud83d\ude00\ud83d\ude00 \u2026 \u2022 item",
+      "mail a@b.co or 10.0.0.1, call +12345678 { lorem ipsum }",
+      "the cat sat on the mat. the cat sat on the mat.\n- one\n- one\n",
+      ("the quick brown fox jumps over the lazy dog " * 300) + "end",
+      Seq.fill(200)(r.nextInt(1000).toString).mkString(" ")) ++
+      Seq.fill(6)(Seq.fill(r.nextInt(30))(Seq("de", "la", "und", "\u00e9t\u00e9", "x",
+        "...", "#")(r.nextInt(7))).mkString(" ")))
+      .map(s => if (s == null) null else UTF8String.fromString(s))
+    def vec(xs: Any*) = new GenericArrayData(xs.toArray)
+    val vectors = Seq(null, vec(), vec(0f, 0f, 0f, 0f), vec(1.5f), vec(1f, null, -2f, 0.5f),
+      vec(Seq.fill(4)(r.nextGaussian().toFloat): _*), vec(Seq.fill(9)(r.nextFloat()): _*))
+    val longSets = Seq(null, vec(), vec(7L), vec(Seq.fill(20)(r.nextLong()): _*))
+    val bytes = Seq(null, Array.emptyByteArray, Array[Byte](1, -2, 127),
+      Array.fill(64)(r.nextInt(256).toByte))
+    val blobs = Seq(null, sql("SELECT datasketch_bloom(1000, 0.01, id) AS f FROM range(200)")
+      .head().getAs[Array[Byte]](0))
+    def one(vs: Seq[Any]): Seq[InternalRow] = vs.map(v => InternalRow(v))
+    def two(v1: Seq[Any], v2: Seq[Any]): Seq[InternalRow] =
+      for (x <- v1; y <- v2) yield InternalRow(x, y)
+    val texts = one(strings)
+
+    val a = col("a"); val b = col("b")
+    val floats = ArrayType(FloatType)
+    val cents = Array(Array(0.5, -1.0, 2.0, 0.0), Array(1.0, 1.0, 1.0, 1.0),
+      Array(-2.0, 0.25, 0.0, 3.0))
+    val pq = ProductQuantizer.PqModel(2, 2, 4, Array.tabulate(2, 4, 2)((m, j, d) =>
+      (m + 1) * 0.5 - j + d * 0.25))
+    val luts = null +: vectors.drop(1).map(v => GraftRuntime.pqLut(v, pq.flat, pq.m, pq.dsub, pq.ksub))
+    val codes = Seq(null, Array.emptyByteArray, Array[Byte](3), Array[Byte](0, 2))
+    val nb = TextOps.NbModel(64, 5L, -1L, Seq((3L, 7L), (10L, -4L), (63L, 2L)))
+    val kernels: Seq[(Native, Seq[InternalRow])] = Seq(
+      kernel(DedupOps.simhash(a), StringType) -> texts,
+      kernel(DedupOps.shingleSet(a, 3), StringType) -> texts,
+      kernel(SpanDedup.gramHashes(a, 3), StringType) -> texts,
+      kernel(ParagraphDedup.chunkArray(a, 2), StringType) -> texts,
+      kernel(ParagraphDedup.wordWindows(a, 2), StringType) -> texts,
+      kernel(TfIdf.termRuns(a), StringType) -> texts,
+      kernel(TextOps.tokenStats(a), StringType) -> texts,
+      kernel(TextOps.charTrigrams(a), StringType) -> texts,
+      kernel(QualityFilters.repetitionStats(a), StringType) -> texts,
+      kernel(QualityFilters.ruleStats(a), StringType) -> texts,
+      kernel(QualityFilters.repFractions(a), StringType) -> texts,
+      kernel(QualityFilters.rulePass(a, QualityFilters.RuleParams(
+        minWords = 2, checkRepetition = true)), StringType) -> texts,
+      kernel(Privacy.piiCounts(a), StringType) -> texts,
+      kernel(Privacy.redact(a), StringType) -> texts,
+      kernel(NbDocScore.scoreCol(a, nb), StringType) -> texts,
+      kernel(NbDocScore.featBucketsCol(a, 64), StringType) -> texts,
+      kernel(NbDocScore.triBucketsCol(a, 64), StringType) -> texts,
+      kernel(Bpe.tokens(a, Bpe.SeedModel), StringType) -> texts,
+      kernel(Bpe.tokenCount(a, Bpe.SeedModel), StringType) -> texts,
+      kernel(DedupOps.minhashSig(a, 4), ArrayType(LongType)) -> one(longSets),
+      kernel(SimilarityOps.dot(a, b), floats, floats) -> two(vectors, vectors),
+      kernel(SimilarityOps.lshSignature(a, 12), floats) -> one(vectors),
+      kernel(KMeansOps.nearestCentroid(a, cents), floats) -> one(vectors),
+      kernel(KMeansOps.nearestCentroids(a, cents, 2), floats) -> one(vectors),
+      kernel(ProductQuantizer.encode(a, pq), floats) -> one(vectors),
+      kernel(ProductQuantizer.lut(a, pq), floats) -> one(vectors),
+      kernel(ProductQuantizer.adc(a, b, pq.ksub), ArrayType(DoubleType), BinaryType) ->
+        two(luts, codes),
+      kernel(Quantize.int8Pack(a, b), floats, DoubleType) -> two(vectors, Seq(null, 0.0, 0.02)),
+      kernel(Quantize.int8Dot(a, b), BinaryType, BinaryType) -> two(bytes, bytes),
+      bloomLane("INT", IntegerType) -> two(blobs, Seq(null, 0, 42, 1000)),
+      bloomLane("FLOAT", FloatType) -> two(blobs, Seq(null, 0f, 42f)),
+      bloomLane("STRING", StringType) -> two(blobs, strings),
+      bloomLane("BINARY", BinaryType) -> two(blobs, bytes))
+
+    assert(kernels.map(_._1.prettyName).distinct.size == 30)
+    for ((k, rows) <- kernels) {
+      val out = Seq(Alias(k, "out")())
+      val compiled = GenerateUnsafeProjection.generate(out)
+      val interpreted = InterpretedUnsafeProjection.createProjection(out)
+      for (row <- rows) {
+        assert(compiled(row) == interpreted(row),
+          s"${k.prettyName}/${k.method}: codegen/interpreted split on $row")
+      }
+    }
+  }
+
+  test("kernel SQL names reject wrong-typed arguments at analysis (no implicit cast)") {
+    val calls = Seq(
+      "graft_simhash64(1)", "graft_token_stats(1)", "graft_term_runs(1)",
+      "graft_shingle_set(1, 3)", "graft_word_chunks(1, 2)", "graft_word_windows(1, 2)",
+      "graft_gram_hashes(1, 3)", "graft_minhash_sig('a', 4)",
+      "graft_int8_pack('a', 1.0D)", "graft_int8_pack(array(CAST(1 AS FLOAT)), 1)",
+      "graft_int8_dot('a', 'b')", "graft_lsh_signature('a', 8)",
+      "graft_lsh_signature(array(1.0D), 8)",
+      "datasketch_bloom_might_contain(1, 1)")
+    for (c <- calls) {
+      val e = intercept[org.apache.spark.sql.AnalysisException](sql(s"SELECT $c"))
+      assert(e.getMessage.contains("DATATYPE_MISMATCH"), s"$c: ${e.getMessage}")
     }
   }
 }
